@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE local-mode session builder behind every runnable main
-  * (Bench / Verify / Prof / IngestProf). Round 8's NTZ break came
-  * from the same schema hardcoded in two places drifting apart; the
-  * four mains used to carry this conf block as four copies, which is
-  * the identical hazard — a measured tuning applied to three of the
-  * four silently unbalances the comparison between them.
+  * (Verify, PlanAudit, ScaleAudit, SynthScale, the race probes) and
+  * the perfbench harness. A conf block copied per main drifts: a
+  * measured tuning applied to some copies silently unbalances the
+  * comparison between them.
   *
   * Every setting here is LOCAL-MODE tuning for the driver's
   * single-JVM `local[32]` box. A real multi-executor cluster keeps
@@ -15,8 +14,8 @@ import org.apache.spark.sql.SparkSession
   */
 object LocalSession {
 
-  /** Common builder; callers append main-specific configs (e.g.
-    * Prof's PROF_CODEGEN override) before `getOrCreate()`. */
+  /** Common builder; callers append main-specific configs before
+    * `getOrCreate()`. */
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -54,13 +53,11 @@ object LocalSession {
       // 0.15-0.2 s of pure scheduling per store re-read — 21 listing
       // jobs ≈ 1.9 s/run on q168, re-paid per micro-batch (measured
       // r21: q168 11.1→7.8 s, q171 33.1→23.0 s with driver-side
-      // listing). Scale-dependent, so parameterised: a cluster reading
-      // 10k+-partition tables wants the distributed listing back —
-      // set GRAFT_LIST_THRESHOLD (or the conf) lower there; table
-      // formats with manifests (guide §6) sidestep the listing
-      // entirely.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("GRAFT_LIST_THRESHOLD", "4096"))
+      // listing). Scale-dependent: a cluster reading 10k+-partition
+      // tables wants the distributed listing back — set the conf
+      // lower on the returned builder there; table formats with
+      // manifests (guide §6) sidestep the listing entirely.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
       // driver-compare determinism: the oracle (DuckDB) reads naive
       // timestamps; pin the session so TZ-sensitive entries canonize
       // identically on any host

@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.TempDirs.deleteRecursively
 import graft.factors.{Alpha101, EmaFamily, Momentum, Technical, Value}
 import graft.sources.Quotes
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -381,7 +382,7 @@ object FactorQueries {
     * own — at most one run root per family stays on disk — so consume
     * (collect/write) a returned frame before invoking the same entry
     * again; an unconsumed earlier frame would dangle on deleted files
-    * (r19 ADVICE 1). Verify and Bench both consume eagerly. */
+    * (r19 ADVICE 1). Verify and perfbench both consume eagerly. */
   def streamMartAppend: Q = (s, dir) => {
     val run = streamEntryFromSeed(s, dir, "technical")
     s.read.parquet(s"$run/mart")
@@ -671,47 +672,13 @@ object FactorQueries {
   // per (session, dir, family) and memoized; each entry run COPIES
   // the seed into a fresh run root (the stream MUTATES its stores,
   // so runs never share them) and replays the maintenance on a fresh
-  // checkpoint. Bench times the seed builds on their own
-  // `stream_scaffold` line ([[primeStreamSeeds]] / [[dropStreamSeeds]]
-  // are its prime/armor hooks), and the entry walls become the primed
-  // repeat-run cost: copy + 3-batch maintenance + mart read. The
-  // replay files are read straight from the BASE seed (read-only for
-  // the stream); specs keep driving [[streamScaffold]] directly with
-  // explicit roots — seeding is an entry/bench concern.
-
-  /** Value = (scratch root, force-build thunk). The root is allocated
-    * EAGERLY so [[dropStreamSeeds]] can delete it without forcing the
-    * build — a cached entry whose build previously threw (Scala lazy
-    * vals retry on access) would otherwise re-run the multi-second
-    * seed build inside the armor's drop hook just to learn the path
-    * (r19 ADVICE 2). */
-  private val streamSeedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), (String, () => String)]()
-
-  private def streamSeed(s: SparkSession, dir: String, family: String)(
-      build: String => Unit): String = {
-    val holder = streamSeedCache.computeIfAbsent((s, dir, family), { _ =>
-      val r = graft.TempDirs.scratch(s"graft_seed_$family", preferShm = true)
-      lazy val built: String = {
-        try { build(r); r }
-        catch { case e: Throwable =>
-          // a failed build must leave the pre-allocated root EMPTY so
-          // the lazy retry can re-run into it — the replay-file writes
-          // are ErrorIfExists by design, so leftovers from a partial
-          // build would fail every retry (r20 review: the old code
-          // allocated a fresh root per retry; the eager root must not
-          // lose that recoverability)
-          try {
-            deleteRecursively(java.nio.file.Paths.get(r))
-            java.nio.file.Files.createDirectories(java.nio.file.Paths.get(r))
-          } catch { case _: Exception => () }
-          throw e
-        }
-      }
-      (r, () => built)
-    })
-    holder._2()
-  }
+  // checkpoint. The entry walls are then the repeat-run cost: copy +
+  // 3-batch maintenance + mart read. The replay files are read
+  // straight from the BASE seed (read-only for the stream); specs
+  // keep driving [[streamScaffold]] directly with explicit roots —
+  // seeding is an entry concern.
+  private val streamSeed = new graft.TempDirs.BuiltRoots[
+    (SparkSession, String, String)](k => s"graft_seed_${k._3}")
 
   /** Recursive copy, excluding top-level entries in `exclude`.
     * Directories are created in walk order first, then the FILE
@@ -774,7 +741,7 @@ object FactorQueries {
   /** The shared base seed: bars + first-bar registry + replay files
     * for (session, dir) — identical across families, built once. */
   private def baseStreamSeed(s: SparkSession, dir: String): String =
-    streamSeed(s, dir, "base") { r =>
+    streamSeed((s, dir, "base")) { r =>
       seedStores(s, Quotes.panel(s, dir), r); ()
     }
 
@@ -782,7 +749,7 @@ object FactorQueries {
     * state snapshot, where the family keeps one). */
   private def familyStreamSeed(s: SparkSession, dir: String, family: String,
       buildHistorical: (String, Long) => Unit): String =
-    streamSeed(s, dir, family) { r =>
+    streamSeed((s, dir, family)) { r =>
       copyTree(baseStreamSeed(s, dir), r, exclude = Set("in"))
       buildHistorical(r, seedCut(r))
     }
@@ -795,7 +762,7 @@ object FactorQueries {
     * family) stays on disk: a new run deletes its predecessor first —
     * /dev/shm must not accumulate a full store copy per invocation
     * (r19 review finding). Contract: a returned frame is consumed
-    * before the same entry runs again (Verify and Bench both do). */
+    * before the same entry runs again (Verify and perfbench both do). */
   private val lastRunRoot = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), String]()
 
@@ -820,63 +787,6 @@ object FactorQueries {
     afterCopy(run)
     streamStart(s, run, s"${baseStreamSeed(s, dir)}/in", onBatch(run))(None)
     run
-  }
-
-  /** Bench hooks: build every family's seed now (the
-    * `stream_scaffold` line), forget them (its rerun armor). The
-    * base seed builds first — families copy from it — then the
-    * family historicals run concurrently (independent memo keys,
-    * the [[primeFactorMarts]] pattern). */
-  def primeStreamSeeds(s: SparkSession, dir: String): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      streamFamilies.size + 1, r => {
-        val t = new Thread(r, "graft-seed-prime"); t.setDaemon(true); t
-      })
-    try {
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      // the structured-streaming entries' replay-fixture seeds are part
-      // of the same scaffold cost (r21) — built here so the bench's
-      // stream_scaffold line owns them. They touch none of the family
-      // stores, so they build CONCURRENTLY with the base + family
-      // seeds (guide §2.6) instead of serializing ahead of them.
-      val replay = Future {
-        graft.streaming.StreamQueries.primeReplaySeeds(s, dir)
-      }
-      baseStreamSeed(s, dir)
-      val builds = streamFamilies.map { case (family, hist, _) =>
-        Future { familyStreamSeed(s, dir, family, hist(s, dir)) }
-      }
-      // await EVERY build before propagating a failure: rethrowing on
-      // the first failed future would leave the other six heavy
-      // builds running in the background, contending with whatever
-      // the caller times next (r19 review finding)
-      val outcomes = (builds :+ replay).map(b => scala.util.Try(
-        Await.result(b, scala.concurrent.duration.Duration.Inf)))
-      outcomes.collectFirst { case scala.util.Failure(e) => throw e }
-      ()
-    } finally pool.shutdown()
-  }
-
-  def dropStreamSeeds(s: SparkSession, dir: String): Unit = {
-    graft.streaming.StreamQueries.dropReplaySeeds(s, dir)
-    // delete the forgotten seed DIRECTORIES too — the armor's rerun
-    // rebuilds fresh copies, and /dev/shm must not hold both
-    // generations until JVM exit (r19 review finding)
-    import scala.jdk.CollectionConverters._
-    streamSeedCache.entrySet().iterator().asScala
-      .filter(e => e.getKey._1 == s && e.getKey._2 == dir)
-      .foreach(e =>
-        // the eagerly-allocated root, never the build thunk: forcing a
-        // previously-failed lazy build just to delete its directory
-        // would re-run the whole seed build here (r19 ADVICE 2)
-        try deleteRecursively(java.nio.file.Paths.get(e.getValue()._1))
-        catch { case _: Exception => () })
-    streamSeedCache.keySet.removeIf(k => k._1 == s && k._2 == dir)
-    // the q171 template is part of the scaffold cost the line claims
-    // to attribute — an armored rerun that skipped its rebuild would
-    // keep a template-free minimum (r19 review finding)
-    alphaTemplateCache.keySet.removeIf(_._1 == s)
   }
 
   /** q167 harness on [[streamScaffold]]: per non-empty batch, one
@@ -1672,8 +1582,7 @@ object FactorQueries {
       Value.columns, minRows = 64)
 
   /** The streamed-family registry: seed-buildable historical +
-    * maintenance per family, shared by the entries and the bench's
-    * `stream_scaffold` prime line. */
+    * maintenance per family, shared by the streamed entries. */
   private def streamFamilies: Seq[(String,
       (SparkSession, String) => (String, Long) => Unit,
       (SparkSession, String) => String => (DataFrame, Long) => Unit)] = Seq(
@@ -1851,8 +1760,8 @@ object FactorQueries {
     * the full 101-alpha DAG analyzed over an empty all-nullable
     * stand-in, built exactly once and swapped onto every consumer's
     * input ([[org.apache.spark.sql.graftbridge.PlanBridge.swapLeaf]]).
-    * Session-scoped so the entry's repeat runs (bench rerun armor)
-    * skip the multi-second build entirely. */
+    * Session-scoped so the entry's repeat runs skip the
+    * multi-second build entirely. */
   private val alphaTemplateCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, Seq[(String, org.apache.spark.sql.types.DataType)]),
     () => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
@@ -2313,7 +2222,7 @@ object FactorQueries {
     * universe) via the shared [[alphaFull]] frame. */
   /** The q58/q90/q91 SHARED full-panel alpha frame, computed ONCE per
     * (session, sfDir) and persisted: one SparkSession serves every
-    * Verify/Bench entry, and the ~500-column alpha DAG costs its full
+    * Verify/perfbench entry, and the ~500-column alpha DAG costs its full
     * driver-side planning + codegen constant per re-derivation
     * (round-6 verdict, What's-wrong #3b). Until round 9, q58/q91 ran
     * a SEPARATE `stock <= 30` subset derivation — cross-sectional
@@ -2326,13 +2235,11 @@ object FactorQueries {
     * at sf0.1 — the raw compute frame's ~460 intermediates stay out
     * of the cache), comfortable for MEMORY_AND_DISK; values are
     * deterministic, so consumers are unchanged across re-reads. */
-  /** Bench hook: build ALL factor marts for (session, dir) NOW —
-    * the alpha panel plus the five basic-factor families — so the
-    * one-time build cost appears as the `factor_mart` bench line
-    * instead of inflating whichever consumer happens to run first
-    * (q58 under name-sorted execution — the r9 bench misattributed
-    * ~26% of total wall to it; q40 would have inherited the same
-    * problem for the family marts). */
+  /** Build ALL factor marts for (session, dir) NOW — the alpha panel
+    * plus the five basic-factor families — so a caller pays the
+    * one-time build up front instead of inside whichever consumer
+    * happens to run first (FactorPlanSpec and ScaleAudit prime with
+    * it). */
   def primeFactorMarts(s: SparkSession, dir: String): Unit = {
     // builds are independent (six distinct memo keys, six scratch
     // dirs) — run them CONCURRENTLY so the five small family builds
@@ -2350,28 +2257,6 @@ object FactorQueries {
       val builds = martDatasets.map(ds => Future { martFrame(s, dir, ds) })
       builds.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
     } finally pool.shutdown()
-  }
-
-  /** Alpha mart only — the sf2 diagnostics sweep's prime (its entry
-    * list consumes no family mart, so building them there would be
-    * dead work on the diag line). */
-  def primeAlphaFull(s: SparkSession, dir: String): Unit = { alphaFull(s, dir); () }
-
-  /** Rerun-armor hook (Bench): forget every memoized mart for
-    * (session, dir) so the next [[primeFactorMarts]] re-derives and
-    * re-writes from scratch — without this, a bench rerun of the
-    * `factor_mart` line would time a warm memo (a ~0.1 s map lookup)
-    * and report it as the build (the exact mislabeling the derive
-    * lines' missing armor caused in r15). The superseded mart files
-    * stay in scratch until JVM exit (TempDirs hook) — ≤ ~85 MB each
-    * at sf0.1, never re-read. */
-  def dropFactorMartMemos(s: SparkSession, dir: String): Unit =
-    martDatasets.foreach(ds => martCache.remove((s, dir, ds.name)))
-
-  /** Alpha-mart memo drop (test seam; [[dropFactorMartMemos]] is the
-    * bench's armor hook). */
-  def dropAlphaMemo(s: SparkSession, dir: String): Unit = {
-    martCache.remove((s, dir, alphaDataset.name)); ()
   }
 
   /** One materialized factor dataset: its mart name, a CODE VERSION
@@ -2474,7 +2359,7 @@ object FactorQueries {
   /** Sessions whose cache-cleanup listener is already registered —
     * one listener per session, not one per (dataset, rebuild): the
     * six-dataset split would otherwise stack 6+ identical listeners
-    * per session on the bus (more under bench rerun armor). */
+    * per session on the bus. */
   private val cleanupHooked: java.util.Set[SparkSession] =
     java.util.Collections.newSetFromMap(
       new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
@@ -2489,7 +2374,7 @@ object FactorQueries {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
           martCache.keySet.removeIf(_._1 eq ss)
-          streamSeedCache.keySet.removeIf(_._1 eq ss)
+          streamSeed.forgetIf(_._1 eq ss)
           alphaTemplateCache.keySet.removeIf(_._1 eq ss)
           lastRunRoot.keySet.removeIf(_._1 eq ss)
           cleanupHooked.remove(ss)
@@ -2500,8 +2385,8 @@ object FactorQueries {
     // whose staleness manifest matches (see [[buildMartAt]]).
     // Default (unset): session-scoped scratch, self-deleting at JVM
     // exit — a stale mart can never poison the correctness gate.
-    // Bench disables the root ([[ignorePersistentMartRoot]]) so its
-    // `factor_mart` line always times a true build, never a reuse.
+    // [[ignorePersistentMartRoot]] disables the root for callers that
+    // must build, never reuse.
     val root =
       if (persistentRootIgnored) None else sys.env.get("SPARK_GRAFT_MART_DIR")
     val path = buildMartAt(ss, d, ds, root)
@@ -2515,13 +2400,12 @@ object FactorQueries {
     mart.select(scala.collection.immutable.ArraySeq.unsafeWrapArray(cols): _*)
   }
 
-  /** Bench hook: never consult SPARK_GRAFT_MART_DIR in this JVM. A
-    * persistent mart short-circuits the build, so with the root in
-    * play the `factor_mart` bench line would time a _SUCCESS-gated
-    * READ and the rerun armor's forced recompute (memo drop) would be
-    * defeated by the on-disk copy — the exact warm-cache mislabeling
-    * the armor exists to prevent (r16 ADVICE item 2). Irreversible by
-    * design; only Bench.main calls it, before any build. */
+  /** Never consult SPARK_GRAFT_MART_DIR in this JVM. A persistent
+    * mart short-circuits the build, so with the root in play a timed
+    * backfill would measure a _SUCCESS-gated READ, and a test would
+    * read whatever an earlier process left there (r16 ADVICE item 2).
+    * Irreversible by design; perfbench's nightly job, ScaleAudit and
+    * SparkSpec call it before any build. */
   def ignorePersistentMartRoot(): Unit = { persistentRootIgnored = true }
   @volatile private var persistentRootIgnored = false
 
@@ -2752,15 +2636,6 @@ object FactorQueries {
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.exists(p)) {
-      val st = java.nio.file.Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { val _ = f.toFile.delete() })
-      finally st.close()
-    }
-  }
 
   def columnDiscovery: Q = (s, dir) => {
     val a = alphaFull(s, dir)

@@ -69,8 +69,7 @@ object IngestQueries {
   }
 
   /** The ingest chain over a fixture at `root`; returns the cleaned
-    * merged frame (pre-sink). Shared by q93 and the bench's
-    * throughput measurement. */
+    * merged frame (pre-sink) for q93. */
   def ingestChain(s: SparkSession, root: String): DataFrame = {
     val ticks = Ingest.readZippedCsv(s, s"$root/zips/*.zip").toDF()
       .withColumn("code",

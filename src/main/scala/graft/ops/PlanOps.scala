@@ -51,8 +51,8 @@ object PlanOps {
     * corpus at sf0.1 (isolated q90, same commit): uncapped 152.9 s,
     * cap 6 → 142.1, 10 → 124.5, 14 → 114.2, 20 → 106.1, 26 → 112.1,
     * 32 → 100.4/98.4 (repeated), 48 → 118.2. 32 is the measured
-    * optimum; overridable via GRAFT_BATCH_CAP (0 = uncapped). */
-  private val DefaultBatchCap = 32
+    * optimum. */
+  private val BatchCap = 32
 
   def withColumnsBatched(df: DataFrame, defs: Seq[(String, Column)]): DataFrame =
     withColumnsBatched(df, defs, Map.empty, "day")
@@ -63,8 +63,7 @@ object PlanOps {
     * expression they carry (the stored Column IS the window
     * formulation), but LOWER to [[graft.plans.MultiRankNode]] stages
     * — all ranks of a batch in one per-group pass instead of one
-    * WindowExec Sort per rank ordering. `GRAFT_XS_RANK=window`
-    * restores the window lowering (A/B and parity testing). */
+    * WindowExec Sort per rank ordering. */
   def withColumnsBatched(df: DataFrame, defs: Seq[(String, Column)],
       ranks: Map[String, String], partKey: String): DataFrame =
     withColumnsBatched(df, defs, ranks, partKey, None)
@@ -77,26 +76,22 @@ object PlanOps {
     * a custom operator ([[graft.plans.MultiRankNode]]) — and at scale
     * the dead width rides every exchange and every WindowExec buffer
     * copy. Build-time pruning is deterministic, engine-independent,
-    * and applies identically to both rank lowerings. */
+    * and applies to rank stages and projections alike. */
   def withColumnsBatched(df: DataFrame, defs: Seq[(String, Column)],
       ranks: Map[String, String], partKey: String,
       keep: Option[Seq[String]]): DataFrame = {
-    val cap = sys.env.get("GRAFT_BATCH_CAP").map(_.toInt).getOrElse(DefaultBatchCap)
-    val useExec = ranks.nonEmpty && !sys.env.get("GRAFT_XS_RANK").contains("window")
-    val ordered =
-      if (sys.env.get("GRAFT_SCHED").contains("greedy")) defs
-      else keyPhaseOrder(defs, ranks.keySet)
+    val ordered = keyPhaseOrder(defs, ranks.keySet)
     val batches = Vector.newBuilder[ListMap[String, Column]]
     var cur = ListMap.empty[String, Column]
     var curNonRank = 0 // cap counts projection width; ranks aren't projected
     ordered.foreach { case (name, c) =>
-      val isRank = useExec && ranks.contains(name)
-      // under exec lowering a rank may read an EARLIER rank of the
-      // same batch (rank-of-rank chains compute sequentially inside
-      // one group pass); any other intra-batch read still splits
+      val isRank = ranks.contains(name)
+      // a rank may read an EARLIER rank of the same batch (rank-of-
+      // rank chains compute sequentially inside one group pass); any
+      // other intra-batch read still splits
       val conflict = refs(c).exists(r =>
         cur.contains(r) && !(isRank && ranks.contains(r)))
-      val full = cap > 0 && (if (isRank) false else curNonRank >= cap)
+      val full = !isRank && curNonRank >= BatchCap
       if (cur.contains(name) || conflict || full) {
         batches += cur; cur = ListMap(name -> c); curNonRank = if (isRank) 0 else 1
       } else { cur = cur + (name -> c); if (!isRank) curNonRank += 1 }
@@ -120,14 +115,11 @@ object PlanOps {
         arr
     }
     bs.zipWithIndex.foldLeft(df) { case (d, (b, i)) =>
+      val (rk, ex) = b.toSeq.partition { case (n, _) => ranks.contains(n) }
+      val d2 = if (ex.nonEmpty) d.withColumns(ListMap(ex: _*)) else d
       val applied =
-        if (!useExec) d.withColumns(b)
-        else {
-          val (rk, ex) = b.toSeq.partition { case (n, _) => ranks.contains(n) }
-          val d2 = if (ex.nonEmpty) d.withColumns(ListMap(ex: _*)) else d
-          if (rk.isEmpty) d2
-          else multiRankStage(d2, partKey, rk.map { case (n, _) => n -> ranks(n) })
-        }
+        if (rk.isEmpty) d2
+        else multiRankStage(d2, partKey, rk.map { case (n, _) => n -> ranks(n) })
       if (liveAfter == null) applied
       else {
         val live = liveAfter(i)
@@ -194,8 +186,7 @@ object PlanOps {
       graft.plans.MultiRankNode(keys, ins, outs, rankDefs.map(_._3), plan))
   }
 
-  /** Key-phase scheduling (the default; GRAFT_SCHED=greedy restores
-    * source order): permute definitions so window definitions with
+  /** Key-phase scheduling: permute definitions so window definitions with
     * the same partition key cluster into contiguous phases — each
     * stock↔day key flip in the layer sequence is one full-frame
     * Exchange, and the hand-written TS/XS stage alternation flips
@@ -314,8 +305,8 @@ object PlanOps {
     * calls NESTED inside a larger expression (`-xr(x) * xr(y)`) are
     * hoisted to fresh named defs automatically; the recorded def
     * carries the equivalent WINDOW formulation ([[XsOps.rankPct]]),
-    * so scheduling classification and the `GRAFT_XS_RANK=window`
-    * fallback are byte-identical to the hand-written window chain. */
+    * so scheduling classifies it exactly like the hand-written
+    * window chain. */
   final class RankRecorder(val partKey: String) {
     private var n = 0
     private var pending = Vector.empty[(String, Column)]

@@ -62,8 +62,7 @@ import org.apache.spark.sql.types._
   * ignoreNulls offsets, non-literal defaults, float/double partition
   * keys (boxed equals would split a -0.0/0.0 group) — leaves the
   * WHOLE operator on Spark's WindowExec (the strategy matches
-  * all-or-nothing), and
-  * `GRAFT_TS_WINDOW=spark` disables the lowering globally for A/B.
+  * all-or-nothing).
   * Parity is pinned by TsWindowSpec's randomized window-vs-node
   * property cases (nulls, -0.0, NaN, ties) plus the hash-exact
   * Alpha101/Factor goldens and the driver's DuckDB oracle.
@@ -74,23 +73,18 @@ import org.apache.spark.sql.types._
   * the per-group evaluation is replaced.
   */
 object TsWindowStrategy extends SparkStrategy {
-  /** Lowering gate: session conf `spark.graft.tsWindow` (runtime
-    * A/B + the spec's fallback-parity probe), defaulting to the
-    * GRAFT_TS_WINDOW env (external escape hatch). "spark"/"window"
-    * disables the lowering entirely; "ts" lowers only ordered
-    * entity-keyed specs (the r20 behavior — partition-only XS specs
-    * and row_number keep WindowExec, the r21 A/B baseline); any
-    * other value lowers everything supported. */
-  private def mode: String = try {
+  /** Lowering gate: session conf `spark.graft.tsWindow=window` keeps
+    * Spark's WindowExec (TsWindowSpec's reference side); any other
+    * value lowers everything supported. */
+  private def useWindowExec: Boolean = try {
     org.apache.spark.sql.internal.SQLConf.get.getConfString(
-      "spark.graft.tsWindow", sys.env.getOrElse("GRAFT_TS_WINDOW", "exec"))
-  } catch { case _: Exception => "exec" }
+      "spark.graft.tsWindow", "exec") == "window"
+  } catch { case _: Exception => false }
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case w: LogicalWindow =>
-      val m = mode
-      if (m == "spark" || m == "window") Nil
-      else TsWindowExec.plan(w, planLater(w.child), tsOnly = m == "ts").toSeq
+      if (useWindowExec) Nil
+      else TsWindowExec.plan(w, planLater(w.child)).toSeq
     case _ => Nil
   }
 }
@@ -154,12 +148,10 @@ case class TsWindowExec(
     val spillBytes = conf.windowExecBufferSpillSizeThreshold
     // r21 memory guard: cap the unspillable per-group primitive block
     // at ~chunkRows output rows per segment (`spark.graft.tsWindow
-    // .chunkRows` / GRAFT_TSWIN_CHUNK for A/B and the spec's tiny-
-    // chunk parity probe). 64k rows ≈ (#inputs + #fns) × 512 KB —
+    // .chunkRows`, set by the spec's tiny-chunk parity probe). 64k rows ≈ (#inputs + #fns) × 512 KB —
     // a skewed tick-grain entity group can no longer OOM a task.
     val chunkRows = try {
-      conf.getConfString("spark.graft.tsWindow.chunkRows",
-        sys.env.getOrElse("GRAFT_TSWIN_CHUNK", "65536")).toInt
+      conf.getConfString("spark.graft.tsWindow.chunkRows", "65536").toInt
     } catch { case _: Exception => 65536 }
     child.execute().mapPartitions { iter =>
       if (!iter.hasNext) Iterator.empty
@@ -183,11 +175,8 @@ object TsWindowExec {
     case _ => false
   }
 
-  /** Try to lower a logical Window; None → Spark's WindowExec.
-    * `tsOnly` restricts to the r20 shape (ordered specs, no
-    * whole-partition frames, no row_number) for A/B. */
-  def plan(w: LogicalWindow, child: SparkPlan,
-      tsOnly: Boolean = false): Option[TsWindowExec] = {
+  /** Try to lower a logical Window; None → Spark's WindowExec. */
+  def plan(w: LogicalWindow, child: SparkPlan): Option[TsWindowExec] = {
     // attribute partition keys of exactly-comparable types, and either
     // a single ascending attribute ordering (the TS shape — the
     // panel's (stock, day)) or NO ordering (the partition-only XS
@@ -199,7 +188,7 @@ object TsWindowExec {
     if (w.orderSpec.size == 1) {
       val so = w.orderSpec.head
       if (so.direction != Ascending || !so.child.isInstanceOf[Attribute]) return None
-    } else if (tsOnly) return None
+    }
 
     val inputs = Vector.newBuilder[Expression]
     var inputKeys = Map.empty[Expression, Int] // canonicalized → ordinal
@@ -235,8 +224,7 @@ object TsWindowExec {
       }
       // the partition-only XS frame (and explicit whole-partition
       // frames over ordered specs): one aggregate value per group
-      case SpecifiedWindowFrame(RowFrame, UnboundedPreceding, UnboundedFollowing)
-          if !tsOnly =>
+      case SpecifiedWindowFrame(RowFrame, UnboundedPreceding, UnboundedFollowing) =>
         TsFnSpec.WholeSpan
       case _ => -1
     }
@@ -307,7 +295,7 @@ object TsWindowExec {
           // row_number over the ordered spec: position in the group's
           // buffer order — identical to WindowExec's RowNumberLike
           // counter over the same sorted child
-          case _: RowNumber if w.orderSpec.nonEmpty && !tsOnly =>
+          case _: RowNumber if w.orderSpec.nonEmpty =>
             specs += TsFnSpec(TsFnKind.RowNum, -1, Int.MaxValue); true
           // frameless offsets: lag/lead with literal offset, literal
           // null default, respectNulls — read the offset from the

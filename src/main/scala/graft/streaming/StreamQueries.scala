@@ -45,7 +45,7 @@ object StreamQueries {
     * event time must be monotone across batches for exact replay,
     * StreamOps.emaStream). Memoized — see [[replaySeed]]. */
   private def emaReplaySeed(s: SparkSession, dir: String): String =
-    replaySeed(s, dir, "ema") { r =>
+    replaySeed((s, dir, "ema")) { r =>
       val slice = emaSlice(s, dir)
       Seq((lit(1), 22), (lit(23), 44), (lit(45), Int.MaxValue)).zipWithIndex
         .foreach { case ((lo, hi), i) =>
@@ -123,9 +123,10 @@ object StreamQueries {
     * SINGLE-THREADING ASSUMPTION: the override is session-global for
     * the duration of `body` (awaitTermination included); a batch
     * query running CONCURRENTLY on the same session would silently
-    * plan with `n` shuffle partitions. The sequential Verify/Bench
-    * drivers satisfy this; a concurrent caller should run the stream
-    * on `s.newSession()` instead. */
+    * plan with `n` shuffle partitions. Verify runs its entries
+    * sequentially, and perfbench's nightly job runs the family-mart
+    * backfill concurrently but never beside a stream; a concurrent
+    * caller should run the stream on `s.newSession()` instead. */
   private def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
@@ -141,83 +142,9 @@ object StreamQueries {
     * root, exactly the [[graft.analytics.FactorQueries]] stream-seed
     * precedent (r18 verdict ask #6). Each run streams the immutable
     * seed files against a FRESH checkpoint + sink, so every run's
-    * stream still computes from the parquet inputs. Bench attributes
-    * seed builds to the stream_scaffold derive line: FactorQueries'
-    * primeStreamSeeds/dropStreamSeeds hooks call
-    * [[primeReplaySeeds]]/[[dropReplaySeeds]]. The eager root +
-    * lazy-build holder mirrors streamSeed (a failed build empties
-    * the root so the lazy retry can re-run into it). */
-  private val replaySeedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), (String, () => String)]()
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.exists(p)) {
-      val st = java.nio.file.Files.walk(p)
-      try {
-        st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })
-      } finally st.close()
-    }
-  }
-
-  private def replaySeed(s: SparkSession, dir: String, name: String)(
-      build: String => Unit): String = {
-    val holder = replaySeedCache.computeIfAbsent((s, dir, name), { _ =>
-      val r = graft.TempDirs.scratch(s"graft_replay_$name", preferShm = true)
-      lazy val built: String = {
-        try { build(r); r }
-        catch { case e: Throwable =>
-          try {
-            deleteRecursively(java.nio.file.Paths.get(r))
-            java.nio.file.Files.createDirectories(java.nio.file.Paths.get(r))
-          } catch { case _: Exception => () }
-          throw e
-        }
-      }
-      (r, () => built)
-    })
-    holder._2()
-  }
-
-  /** The per-entry seed builders, for the bench's prime hook. */
-  private def replaySeedBuilders: Seq[(SparkSession, String) => Unit] = Seq(
-    (s, d) => { emaReplaySeed(s, d); () },
-    (s, d) => { hourlySource(s, d); () },
-    (s, d) => { dedupSource(s, d); () },
-    (s, d) => { kmvSource(s, d); () },
-    (s, d) => { sessionsSource(s, d); () },
-    (s, d) => { attribSource(s, d); () },
-    (s, d) => { ohlcSource(s, d); () },
-    (s, d) => { cmsSource(s, d); () })
-
-  /** Bench hook: build every replay seed now (attributed to the
-    * stream_scaffold line via FactorQueries.primeStreamSeeds). */
-  private[graft] def primeReplaySeeds(s: SparkSession, dir: String): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4, r => {
-      val t = new Thread(r, "graft-replay-prime"); t.setDaemon(true); t
-    })
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val builds = replaySeedBuilders.map(b => Future { b(s, dir) })
-      val outcomes = builds.map(b => scala.util.Try(
-        Await.result(b, scala.concurrent.duration.Duration.Inf)))
-      outcomes.collectFirst { case scala.util.Failure(e) => throw e }
-      ()
-    } finally pool.shutdown()
-  }
-
-  /** Bench hook: forget + delete the seeds (the scaffold line's rerun
-    * armor must rebuild them for a true minimum). */
-  private[graft] def dropReplaySeeds(s: SparkSession, dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    replaySeedCache.entrySet().iterator().asScala
-      .filter(e => e.getKey._1 == s && e.getKey._2 == dir)
-      .foreach(e =>
-        try deleteRecursively(java.nio.file.Paths.get(e.getValue._1))
-        catch { case _: Exception => () })
-    replaySeedCache.keySet.removeIf(k => k._1 == s && k._2 == dir)
-  }
+    * stream still computes from the parquet inputs. */
+  private val replaySeed = new graft.TempDirs.BuiltRoots[
+    (SparkSession, String, String)](k => s"graft_replay_${k._3}")
 
   /** The shared replay SOURCE: the memoized seed holds one batch
     * file per split condition (three sequential writes → increasing
@@ -230,7 +157,7 @@ object StreamQueries {
     * (see [[tsUtc]]). */
   private def replaySource(s: SparkSession, dir: String, name: String,
       ev: DataFrame, splits: (Long, Long) => Seq[Column]): () => DataFrame = {
-    val seedRoot = replaySeed(s, dir, name) { r =>
+    val seedRoot = replaySeed((s, dir, name)) { r =>
       // fixture transport (2 scalars for the split bounds), not
       // result materialization
       val mm = ev.agg(min(tsMicros(col("ts"))).as("lo"),

@@ -17,7 +17,7 @@ import graft.{LocalSession, PlanAudit}
   * Session-memoized derivations (the alpha panel, cluster labels)
   * are primed per SF dir OUTSIDE the timed windows — consumer
   * entries measure consumption, and the derivations get their own
-  * rows via explicit timing, the bench's convention. Streaming
+  * rows via explicit timing. Streaming
   * entries are skipped ([[PlanAudit.goldenEntries]]'s argument:
   * fixture-driven, scale-independent). Output: one markdown table
   * (slope-descending) ready for README §scale-audit, plus a
@@ -49,7 +49,8 @@ object ScaleAudit {
     require(sfVals.zip(sfVals.tail).forall { case (a, b) => a < b },
       s"SF dirs must be strictly increasing by scale factor, got $sfVals")
     // a persistent mart root would make the factor_mart derive rows
-    // time a manifest-gated READ, not the build — same guard as Bench
+    // time a manifest-gated READ, not the build — same guard as
+    // perfbench's nightly backfill
     graft.analytics.FactorQueries.ignorePersistentMartRoot()
     val minWall = sys.env.getOrElse("SPARK_GRAFT_AUDIT_MIN_WALL", "0.5").toDouble
     val rerunWall = sys.env.getOrElse("SPARK_GRAFT_RERUN_WALL", "2.5").toDouble
@@ -86,7 +87,7 @@ object ScaleAudit {
           try time(fn(spark, dir).write.format("noop").mode("overwrite").save())
           catch { case _: Exception => -1.0 }
         val w1 = once()
-        // the bench's contention armor: min of a rerun on slow reads
+        // contention guard: min of a rerun on slow reads
         val w = if (w1 >= rerunWall) { val w2 = once()
           if (w2 >= 0 && w2 < w1) w2 else w1 } else w1
         name -> w

@@ -13,8 +13,7 @@ object SparkSpec {
     // the suite must be hermetic to ambient deployment config: with
     // SPARK_GRAFT_MART_DIR exported, mart consumers would scan under
     // the persistent root and every plan pin on the scratch path
-    // ('graft_factor_mart...') would go red — the same
-    // mutable-environment fragility the BENCH-artifact tests had.
+    // ('graft_factor_mart...') would go red.
     // Specs that test the persistent path pass an explicit root to
     // buildMartAt, which this switch does not affect.
     graft.analytics.FactorQueries.ignorePersistentMartRoot()
