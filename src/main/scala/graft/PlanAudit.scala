@@ -13,10 +13,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object PlanAudit {
 
   /** The FINAL adaptive plan, after execution has fixed AQE's
-    * runtime choices. */
-  def finalPlan(df: DataFrame): String = {
+    * runtime choices. A cached relation (the session-resident quotes
+    * panel) prints its own adaptive plan, Final and Initial sections
+    * included, under its `InMemoryTableScan`: by default that scan is
+    * a leaf, so the text is the query's own plan; `throughCache` keeps
+    * each cached relation's final plan in place, for pins that bound
+    * a pipeline's shuffles end to end. */
+  def finalPlan(df: DataFrame, throughCache: Boolean = false): String = {
     df.collect()
-    df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    finalSections(df.queryExecution.executedPlan.toString, throughCache)
+  }
+
+  /** Drops every `== Initial Plan ==` section of an adaptive plan's
+    * text, at any nesting depth, and — unless `throughCache` — the
+    * subtree printed under each `InMemoryTableScan`. A node's subtree
+    * is the lines after it indented deeper than its name; a section's
+    * body starts at the marker's own indent. */
+  private[graft] def finalSections(plan: String, throughCache: Boolean): String = {
+    var cut = Int.MaxValue // lines indented this deep or deeper are dropped
+    plan.linesIterator
+      .map(l => l -> l.indexWhere(c => !" :+-".contains(c)))
+      .filter { case (l, i) =>
+        if (i < 0 || i >= cut) false
+        else {
+          val body = l.substring(i)
+          cut =
+            if (body.startsWith("== Initial Plan ==")) i
+            else if (!throughCache && body.startsWith("InMemoryTableScan")) i + 1
+            else Int.MaxValue
+          cut != i
+        }
+      }.map(_._1).mkString("\n")
   }
 
   /** Normalized operator-count signature: exchanges by kind (reused

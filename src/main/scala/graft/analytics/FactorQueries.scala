@@ -2116,23 +2116,28 @@ object FactorQueries {
     * `QuantDB.py:101-125`): 5-way null-preserving LEFT join of the
     * quotes base with the technical/momentum/value factor surfaces
     * for one (stock, day), LIMIT 1. Reuses the rounded entry outputs
-    * so the snapshot matches the factor tables column for column. */
+    * so the snapshot matches the factor tables column for column.
+    *
+    * Scale: the technical mart is read ONCE for both the trend and the
+    * oscillator columns, and the point filter sits on every side —
+    * LocalSession turns constraint propagation off, so Catalyst infers
+    * no filter across the joins, and an unfiltered side would
+    * broadcast (at scale: shuffle) a whole mart for one row. */
   def factorSnapshot: Q = (s, dir) => {
-    val base = Quotes.panel(s, dir)
+    val at = (df: DataFrame) => df.filter(col("stock") === 7 && col("day") === 40)
+    val base = at(Quotes.panel(s, dir))
       .select(col("stock"), col("day"), round(col("close"), 6).as("close"),
         col("volume"))
-    val t2 = technicalTrend(s, dir).select("stock", "day", "bias_20", "rsi_14")
-    val t2b = technicalOsc(s, dir).select("stock", "day", "cci_14", "wr_14")
-    val t5 = momentumEntry(s, dir)
+    val t2 = at(familyEntry(technicalDataset,
+      Seq("bias_20", "rsi_14", "cci_14", "wr_14"))(s, dir))
+    val t5 = at(momentumEntry(s, dir))
       .select("stock", "day", "roc_20", "volatility_20", "pos_20")
-    val t6 = valueEntry(s, dir)
+    val t6 = at(valueEntry(s, dir))
       .select("stock", "day", "pe_zscore_60", "pb_zscore_60", "roe_ttm")
     base
       .join(t2, Seq("stock", "day"), "left")
-      .join(t2b, Seq("stock", "day"), "left")
       .join(t5, Seq("stock", "day"), "left")
       .join(t6, Seq("stock", "day"), "left")
-      .filter(col("stock") === 7 && col("day") === 40)
       .limit(1)
   }
 

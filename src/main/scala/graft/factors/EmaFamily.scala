@@ -12,8 +12,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructTyp
   * not frame-expressible (SURVEY.md §7.3-1).
   *
   * Unlike [[graft.ops.TsOps.ema]] (one series per pass), this runs
-  * EVERY chain in a single repartition(stock) + partition-local sort
-  * + one streaming `mapPartitions` with O(1) state per stock: 11
+  * EVERY chain in a single stock-clustered, (stock, day)-sorted pass
+  * — one streaming `mapPartitions` with O(1) state per stock: 11
   * recursive registers instead of 11 shuffles. The downstream
   * `mass_25` rolling sum reuses the same hash partitioning (no second
   * exchange).
@@ -145,13 +145,12 @@ object EmaFamily {
   /** Adds macd_diff/macd_dea/kdj_k/kdj_d/kdj_j/trix_12/force_13/
     * mass_25 to a quotes panel keyed (stock, day).
     *
-    * ONE exchange end-to-end (FactorPlanSpec pins it): the explicit
-    * repartition+sort comes FIRST, the rsv/fin window pass then finds
-    * its required distribution/order already satisfied (no second
-    * exchange), and mass_25's rolling 25-sum runs inside the same
-    * streaming pass via a ring buffer instead of a post-pass window
-    * (mapPartitions erases partitioning info, so a window after it
-    * would re-shuffle). */
+    * ONE exchange end-to-end (FactorPlanSpec pins it): the rsv/fin
+    * window pass clusters by stock and sorts by (stock, day), and the
+    * kernel consumes its output in that order; mass_25's rolling
+    * 25-sum runs inside the same streaming pass via a ring buffer
+    * instead of a post-pass window (mapPartitions erases partitioning
+    * info, so a window after it would re-shuffle). */
   def compute(quotes: DataFrame): DataFrame = {
     val pre = preFrame(quotes)
     val outSchema = StructType(pre.schema.fields ++
@@ -185,18 +184,20 @@ object EmaFamily {
     withRec.drop("rsv", "fin", "hl")
   }
 
-  /** The shared input pass: one exchange on stock, partition-local
-    * sort, then the window-derived recursion INPUTS (rsv needs the
-    * trailing 9-day high/low, fin the 1-day close lag — bounded
-    * lookback, unlike the recursions themselves). */
+  /** The shared input pass: the window-derived recursion INPUTS (rsv
+    * needs the trailing 9-day high/low, fin the 1-day close lag —
+    * bounded lookback, unlike the recursions themselves). The window
+    * pass is what clusters the rows by stock (an exchange only when
+    * the input is not already stock-clustered — the cached quotes
+    * panel is, even after AQE coalesced its partitions, where an
+    * explicit repartition(stock) would re-shuffle) and sorts them by
+    * (stock, day): its output order is the kernels' input order. */
   private def preFrame(quotes: DataFrame): DataFrame = {
     val W = Window.partitionBy("stock").orderBy("day")
     def t(d: Int) = W.rowsBetween(-(d - 1), 0)
     val hh9 = max(col("high")).over(t(9))
     val ll9 = min(col("low")).over(t(9))
     quotes
-      .repartition(col("stock"))
-      .sortWithinPartitions("stock", "day")
       .withColumn("rsv",
         when(hh9 - ll9 =!= 0.0, (col("close") - ll9) / (hh9 - ll9) * 100.0))
       .withColumn("fin",

@@ -9,7 +9,16 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
+  private var current: SparkSession = _
+
+  /** The shared session, rebuilt when a spec has stopped it (specs of
+    * session-lifecycle cleanup stop it on purpose). */
+  def session: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped) current = build()
+    current
+  }
+
+  private def build(): SparkSession = {
     // the suite must be hermetic to ambient deployment config: with
     // SPARK_GRAFT_MART_DIR exported, mart consumers would scan under
     // the persistent root and every plan pin on the scratch path

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.SparkSpec
+import graft.{PlanAudit, SparkSpec}
 
 /** Plan audits for the factor pipelines: the scaladocs claim every
   * rolling factor shares ONE stock-keyed exchange (and the alpha
@@ -8,14 +8,13 @@ import graft.SparkSpec
   * refactor cannot silently introduce per-factor shuffles. */
 class FactorPlanSpec extends SparkSpec {
 
-  private def exchanges(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-    df.collect() // finalize AQE
-    df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+  // through the cache: the derive pins bound the whole pipeline's
+  // shuffles, the cached panel's own stock exchange included
+  private def exchanges(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    PlanAudit.finalPlan(df, throughCache = true)
       .linesIterator
       .filter(l => l.contains("Exchange ") && !l.contains("ReusedExchange"))
       .toSeq
-  }
 
   test("technical DERIVE: one stock-hash exchange feeds all 21 windows") {
     // the mart BUILD's plan shape (entries now read the mart — their
@@ -80,9 +79,8 @@ class FactorPlanSpec extends SparkSpec {
   }
 
   test("screener mask: factor sides broadcast, no residual shuffle joins") {
-    val df = FactorQueries.screenerMask(spark, "/root/testdata/sf0.001")
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val plan = PlanAudit.finalPlan(
+      FactorQueries.screenerMask(spark, "/root/testdata/sf0.001"))
     // the day-snapshot filter makes every factor side tiny -> all four
     // joins must be broadcast (null-rejecting mask lets Catalyst turn
     // the LEFT joins inner; either join type is fine, shuffle is not)
@@ -90,10 +88,26 @@ class FactorPlanSpec extends SparkSpec {
     assert(plan.linesIterator.count(_.contains("BroadcastHashJoin")) >= 4, plan)
   }
 
+  test("q56 snapshot: one technical-mart scan, point filter pushed to every mart") {
+    val dir = "/root/testdata/sf0.001"
+    FactorQueries.primeFactorMarts(spark, dir)
+    val plan = PlanAudit.finalPlan(FactorQueries.factorSnapshot(spark, dir))
+    val scans = plan.linesIterator.filter(_.contains("graft_factor_mart_")).toSeq
+    // trend + oscillator columns come from ONE read of the technical mart
+    assert(scans.count(_.contains("graft_factor_mart_technical")) == 1, plan)
+    assert(scans.size == 3, plan)
+    // the one-row snapshot never reads a whole mart: the (stock, day)
+    // point filter reaches each mart scan as pushed parquet filters
+    scans.foreach { l =>
+      val pushed = l.split("PushedFilters: ")(1)
+      assert(pushed.contains("EqualTo(stock,7)") && pushed.contains("EqualTo(day,40)"), l)
+    }
+  }
+
   test("sector equity: one industry-day agg exchange + one industry window") {
-    val df = FactorQueries.sectorEquityCurve(spark, "/root/testdata/sf0.001")
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val plan = PlanAudit.finalPlan(
+      FactorQueries.sectorEquityCurve(spark, "/root/testdata/sf0.001"),
+      throughCache = true)
     val ex = plan.linesIterator.filter(l =>
       l.contains("Exchange hashpartitioning") && !l.contains("ReusedExchange")).toSeq
     // stock window + (industry, day) agg + industry window = 3 keyed
@@ -200,9 +214,8 @@ class FactorPlanSpec extends SparkSpec {
     val recall = rows.head.getAs[Double]("recall_at_3")
     assert(recall >= 0.0 && recall <= 1.0, s"recall_at_3=$recall")
     // no shuffle anywhere: broadcasts + TakeOrdered only
-    val df = FactorQueries.similaritySearchIvf(spark, "/root/testdata/sf0.001")
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val plan = PlanAudit.finalPlan(
+      FactorQueries.similaritySearchIvf(spark, "/root/testdata/sf0.001"))
     assert(!plan.contains("SortMergeJoin"), plan)
   }
 
