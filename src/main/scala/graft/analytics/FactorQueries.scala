@@ -2073,72 +2073,104 @@ object FactorQueries {
     * (`app/Quantlib/QuantDB.py:207-224`): day-offset re-index in
     * [-10, +20] around day 30 per stock, close normalized to the
     * anchor close AND to the series' first value (V1 normalize-to-
-    * first window, `pages/1_Market overview.py:81`). The anchor join
-    * is keyed on the stock shuffle; no per-stock driver loops. */
+    * first window, `pages/1_Market overview.py:81`). Both reference
+    * closes are whole-series window values over the stock-partitioned
+    * panel (a stock without day 30 has no anchor and no rows), so the
+    * page is one job: no anchor join, no per-stock driver loops.
+    *
+    * Serving: like every bounded research page this ends in ONE
+    * one-task sort (`coalesce(1).sortWithinPartitions`), not a global
+    * `orderBy`, whose range partitioning costs a sampling job and a
+    * shuffle for a result of a few thousand rows. */
   def klineReplay: Q = (s, dir) => {
-    val q = Quotes.panel(s, dir).select("stock", "day", "close")
-    val wCum = Window.partitionBy("stock").orderBy("day")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val anchors = q.filter(col("day") === 30)
-      .select(col("stock"), col("close").as("c0"))
-    q.withColumn("norm_first",
-        round(col("close") / first(col("close")).over(wCum), 6))
-      .join(anchors, "stock")
-      .withColumn("day_offset", col("day") - 30)
-      .filter(col("day_offset").between(-10, 20))
-      .withColumn("norm_close", round(col("close") / col("c0"), 6))
-      .select(col("stock"), col("day"), col("day_offset"),
-        round(col("close"), 6).as("close"), col("norm_close"), col("norm_first"))
-      .orderBy("stock", "day")
+    val w = Window.partitionBy("stock").orderBy("day")
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    Quotes.panel(s, dir)
+      .select(col("stock"), col("day"), col("close"),
+        first(col("close")).over(w).as("c_first"),
+        max(when(col("day") === 30, col("close"))).over(w).as("c0"))
+      .filter(col("day").between(20, 50) && col("c0").isNotNull)
+      .select(col("stock"), col("day"), (col("day") - 30).as("day_offset"),
+        round(col("close"), 6).as("close"),
+        round(col("close") / col("c0"), 6).as("norm_close"),
+        round(col("close") / col("c_first"), 6).as("norm_first"))
+      .coalesce(1).sortWithinPartitions("stock", "day")
   }
 
   /** q55: industry-peers snapshot (J6, `QuantDB.py:140-156`): the
     * target stock's industry is resolved as a scalar lookup (a
     * correlated scalar subquery in the reference SQL; a broadcast
     * single-row join here — the scalable equivalent), then the top-7
-    * same-industry stocks by market value on the day. */
+    * same-industry stocks by market value on the day. `roe_ttm` is
+    * [[Value.roeTtm]] on the panel row: the value family's window
+    * DAG is not analysed per request for one per-row ratio. */
   def peersSnapshot: Q = (s, dir) => {
-    val v = Value.compute(Quotes.panel(s, dir))
-    val day40 = v.filter(col("day") === 40)
+    val day40 = Quotes.panel(s, dir).filter(col("day") === 40)
       .select(col("stock"), col("industry"), col("total_mv"), col("pe"),
-        col("pb"), col("dv_ratio"), round(col("roe_ttm"), 6).as("roe_ttm"))
+        col("pb"), col("dv_ratio"), round(Value.roeTtm, 6).as("roe_ttm"))
     val tgtInd = day40.filter(col("stock") === 7)
       .select(col("industry").as("t_ind"))
     day40.crossJoin(broadcast(tgtInd))
       .filter(col("industry") === col("t_ind"))
-      .withColumn("mv_yi", round(col("total_mv") / 1e8, 6))
       .orderBy(col("total_mv").desc, col("stock"))
       .limit(7)
-      .select("stock", "mv_yi", "pe", "pb", "dv_ratio", "roe_ttm")
+      .select(col("stock"), round(col("total_mv") / 1e8, 6).as("mv_yi"),
+        col("pe"), col("pb"), col("dv_ratio"), col("roe_ttm"))
   }
 
+  /** The factor frame the snapshot (q56) and screener (q92) pages
+    * read: the panel's `(stock, day)` axis LEFT-joined with the
+    * technical, momentum, value and sentiment marts, built once per
+    * (session, dir) and persisted as a [[Quotes.resident]] next to
+    * the panel. A page joins its panel side to this frame on
+    * `(stock, day)` — the same rows the chained per-mart LEFT joins
+    * gave, since the frame holds exactly one row per panel key —
+    * instead of re-reading and broadcasting four marts per request.
+    * Technical, momentum and value columns are quantized like their
+    * entries (q40/q41, q44, q45); the sentiment flags are integers,
+    * read as stored (q61). */
+  private[graft] def factorFrame(s: SparkSession, dir: String): DataFrame =
+    Quotes.resident(s, dir, "factors") {
+      Seq(
+        technicalDataset -> Seq("ma_5", "ma_20", "ma_60", "bias_20", "rsi_14",
+          "cci_14", "wr_14").map(r6),
+        momentumDataset -> Seq("roc_20", "volatility_20", "pos_20").map(r6),
+        valueDataset -> Seq("pe_zscore_60", "pb_zscore_60", "roe_ttm").map(r6),
+        sentimentDataset -> Seq(col("limit_up_streak"), col("is_limit_up"))
+      ).foldLeft(Quotes.panel(s, dir).select("stock", "day")) {
+        case (acc, (ds, cols)) =>
+          val side = martFrame(s, dir, ds).select(col("stock") +: col("day") +: cols: _*)
+          acc.join(side, Seq("stock", "day"), "left")
+      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+
   /** q56: single-row factor panorama snapshot (J2,
-    * `QuantDB.py:101-125`): 5-way null-preserving LEFT join of the
+    * `QuantDB.py:101-125`): the null-preserving LEFT join of the
     * quotes base with the technical/momentum/value factor surfaces
-    * for one (stock, day), LIMIT 1. Reuses the rounded entry outputs
-    * so the snapshot matches the factor tables column for column.
+    * for one (stock, day), LIMIT 1. The factor side is the
+    * session-resident [[factorFrame]] (quantized like the factor
+    * entries, so the snapshot matches the factor tables column for
+    * column).
     *
-    * Scale: the technical mart is read ONCE for both the trend and the
-    * oscillator columns, and the point filter sits on every side —
-    * LocalSession turns constraint propagation off, so Catalyst infers
-    * no filter across the joins, and an unfiltered side would
-    * broadcast (at scale: shuffle) a whole mart for one row. */
+    * Scale: the point filter sits on both sides — LocalSession turns
+    * constraint propagation off, so Catalyst infers no filter across
+    * the join, and an unfiltered side would broadcast (at scale:
+    * shuffle) a whole frame for one row. The frame side is broadcast
+    * by hint, not by size estimate: before its first fill the cached
+    * frame's estimate is the unfiltered join's, and a planned
+    * shuffle join would leave an exchange behind. The one-row result
+    * is taken from one partition, so `limit` never re-scans in a
+    * second job. */
   def factorSnapshot: Q = (s, dir) => {
-    val at = (df: DataFrame) => df.filter(col("stock") === 7 && col("day") === 40)
-    val base = at(Quotes.panel(s, dir))
+    val at = col("stock") === 7 && col("day") === 40
+    val base = Quotes.panel(s, dir).filter(at)
       .select(col("stock"), col("day"), round(col("close"), 6).as("close"),
         col("volume"))
-    val t2 = at(familyEntry(technicalDataset,
-      Seq("bias_20", "rsi_14", "cci_14", "wr_14"))(s, dir))
-    val t5 = at(momentumEntry(s, dir))
-      .select("stock", "day", "roc_20", "volatility_20", "pos_20")
-    val t6 = at(valueEntry(s, dir))
-      .select("stock", "day", "pe_zscore_60", "pb_zscore_60", "roe_ttm")
-    base
-      .join(t2, Seq("stock", "day"), "left")
-      .join(t5, Seq("stock", "day"), "left")
-      .join(t6, Seq("stock", "day"), "left")
-      .limit(1)
+    val f = factorFrame(s, dir).filter(at)
+      .select("stock", "day", "bias_20", "rsi_14", "cci_14", "wr_14",
+        "roc_20", "volatility_20", "pos_20", "pe_zscore_60", "pb_zscore_60",
+        "roe_ttm")
+    base.join(broadcast(f), Seq("stock", "day"), "left").coalesce(1).limit(1)
   }
 
   /** J3 dynamic join builder (`QuantDB.py:77-99`): fold LEFT joins
@@ -2623,18 +2655,26 @@ object FactorQueries {
     * it. mtime is included (r17 ADVICE 3): a regenerated source with
     * identical file names AND byte sizes but different content must
     * not validate a stale mart as fresh — the cost is a spurious
-    * rebuild on a byte-identical re-copy, the safe direction. */
+    * rebuild on a byte-identical re-copy, the safe direction.
+    *
+    * The walk is `listStatus` reading only path, length and mtime:
+    * `listFiles` wraps each file in a `LocatedFileStatus`, which reads
+    * its permission, and without the native Hadoop library the local
+    * file system answers that by forking `ls -ld` per file. */
   private[graft] def dirFingerprint(d: String): String = {
     val (fs, base) = fsPath(d)
     val qual = base.makeQualified(fs.getUri, fs.getWorkingDirectory)
     val prefix = qual.toUri.getPath
-    val it = fs.listFiles(qual, true)
     val items = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = st.getPath.toUri.getPath.stripPrefix(prefix).stripPrefix("/")
-      items += s"$rel:${st.getLen}:${st.getModificationTime}"
-    }
+    def walk(dir: org.apache.hadoop.fs.Path): Unit =
+      fs.listStatus(dir).foreach { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else {
+          val rel = st.getPath.toUri.getPath.stripPrefix(prefix).stripPrefix("/")
+          items += s"$rel:${st.getLen}:${st.getModificationTime}"
+        }
+      }
+    walk(qual)
     md5Hex(items.sorted.mkString("\n"))
   }
 
@@ -2738,53 +2778,41 @@ object FactorQueries {
     * the filtered set is deterministic. MA alignment is emitted as a
     * column (the reference's checkbox defaults to off).
     *
-    * Scale: each factor surface is one windowed pass over the stock
-    * shuffle; the snapshot filter lands on the join key and prunes
-    * every side; the mask chain is a residual filter — no extra
-    * shuffle beyond the factor joins themselves. */
+    * Scale: the daily change is one lag over the stock-partitioned
+    * panel; the factor columns come from the session-resident
+    * [[factorFrame]], snapshot-filtered and broadcast (by hint, see
+    * [[factorSnapshot]]) into one join; the mask chain is one residual
+    * filter and the result one one-task sort (see [[klineReplay]]) —
+    * two jobs per request. */
   def screenerMask: Q = (s, dir) => {
     val fr6c = (c: Column) => floor(c * 1e6 + lit(0.5)) / 1e6
     val W = Window.partitionBy("stock").orderBy("day")
     val prevC = lag(col("close"), 1).over(W)
     val base = Quotes.panel(s, dir)
-      .withColumn("pct_chg",
-        fr6c((when(prevC =!= 0.0, col("close") / prevC) - lit(1.0)) * 100.0))
       .select(col("stock"), col("day"), col("pe"),
         fr6c(col("total_mv") / 1e8).as("mv_yi"),
-        col("turnover").as("turnover_rate"), col("pct_chg"))
+        col("turnover").as("turnover_rate"),
+        fr6c((when(prevC =!= 0.0, col("close") / prevC) - lit(1.0)) * 100.0)
+          .as("pct_chg"))
       .filter(col("day") === 60)
-    val t2 = technicalTrend(s, dir)
-      .select("stock", "day", "ma_5", "ma_20", "ma_60", "rsi_14")
-      .filter(col("day") === 60)
-    val t5 = momentumEntry(s, dir)
-      .select(col("stock"), col("day"), col("roc_20").as("month_mom"),
-        col("volatility_20").as("volatility"))
-      .filter(col("day") === 60)
-    val t6 = valueEntry(s, dir).select("stock", "day", "roe_ttm")
-      .filter(col("day") === 60)
-    val sent = sentimentFactors(s, dir)
-      .select("stock", "day", "limit_up_streak", "is_limit_up")
-      .filter(col("day") === 60)
-    base
-      .join(t2, Seq("stock", "day"), "left")
-      .join(t5, Seq("stock", "day"), "left")
-      .join(t6, Seq("stock", "day"), "left")
-      .join(sent, Seq("stock", "day"), "left")
-      .withColumn("ma_aligned",
-        (col("ma_5") > col("ma_20") && col("ma_20") > col("ma_60")).cast("int"))
-      .filter(col("mv_yi").between(0.01, 10.0))
-      .filter(col("pe").between(10.0, 48.0))
-      .filter(col("roe_ttm") >= 0.05)
-      .filter(col("pct_chg").between(-5.0, 10.0))
-      .filter(col("turnover_rate") >= 0.02)
-      .filter(col("rsi_14") >= 40.0)
-      .filter(col("month_mom") >= -0.20)
-      .filter(col("volatility") <= 1.0)
-      .filter(col("limit_up_streak") >= 0)
-      .select("stock", "mv_yi", "pe", "roe_ttm", "pct_chg", "turnover_rate",
-        "rsi_14", "ma_aligned", "month_mom", "volatility",
-        "limit_up_streak", "is_limit_up")
-      .orderBy(col("month_mom").desc, col("stock"))
+    val f = factorFrame(s, dir).filter(col("day") === 60)
+    base.join(broadcast(f), Seq("stock", "day"), "left")
+      .filter(col("mv_yi").between(0.01, 10.0) &&
+        col("pe").between(10.0, 48.0) &&
+        col("roe_ttm") >= 0.05 &&
+        col("pct_chg").between(-5.0, 10.0) &&
+        col("turnover_rate") >= 0.02 &&
+        col("rsi_14") >= 40.0 &&
+        col("roc_20") >= -0.20 &&
+        col("volatility_20") <= 1.0 &&
+        col("limit_up_streak") >= 0)
+      .select(col("stock"), col("mv_yi"), col("pe"), col("roe_ttm"),
+        col("pct_chg"), col("turnover_rate"), col("rsi_14"),
+        (col("ma_5") > col("ma_20") && col("ma_20") > col("ma_60"))
+          .cast("int").as("ma_aligned"),
+        col("roc_20").as("month_mom"), col("volatility_20").as("volatility"),
+        col("limit_up_streak"), col("is_limit_up"))
+      .coalesce(1).sortWithinPartitions(col("month_mom").desc, col("stock"))
   }
 
   /** q94: the sector-rotation equity curve (V2,
@@ -2792,27 +2820,30 @@ object FactorQueries {
     * constituent return and mean PE, then
     * equity = cumprod(1 + sector_chg) via the log-sum trick
     * ([[graft.ops.TsOps.cumProdPositive]] — frame-expressible, no
-    * recursion). One groupBy shuffle on (industry, day) + one window
-    * pass keyed on industry. */
+    * recursion). One hash exchange keyed on `industry` feeds both the
+    * (industry, day) aggregate and the industry window (a separate
+    * groupBy exchange on (industry, day) would not satisfy the
+    * window); the result is a one-task sort (see [[klineReplay]]). */
   def sectorEquityCurve: Q = (s, dir) => {
     val fr6c = (c: Column) => floor(c * 1e6 + lit(0.5)) / 1e6
     val W = Window.partitionBy("stock").orderBy("day")
     val prevC = lag(col("close"), 1).over(W)
-    val r = Quotes.panel(s, dir)
-      .withColumn("ret", when(prevC =!= 0.0, col("close") / prevC) - lit(1.0))
-      .filter(col("day") > 1)
-    val g = r.groupBy("industry", "day").agg(
-      count(lit(1)).as("n_constituents"),
-      avg(col("ret")).as("chg"),
-      avg(col("pe")).as("pe_raw"))
     val wI = Window.partitionBy("industry").orderBy("day")
-    g.withColumn("equity",
-        fr6c(graft.ops.TsOps.cumProdPositive(lit(1.0) + col("chg"), wI)))
+    Quotes.panel(s, dir)
+      .select(col("industry"), col("day"), col("pe"),
+        (when(prevC =!= 0.0, col("close") / prevC) - lit(1.0)).as("ret"))
+      .filter(col("day") > 1)
+      .repartition(col("industry"))
+      .groupBy("industry", "day").agg(
+        count(lit(1)).as("n_constituents"),
+        avg(col("ret")).as("chg"),
+        avg(col("pe")).as("pe_raw"))
       .select(col("industry"), col("day"), col("n_constituents"),
         fr6c(col("chg") * 100.0).as("sector_chg"),
         fr6c(col("pe_raw")).as("sector_pe"),
-        col("equity"))
-      .orderBy("industry", "day")
+        fr6c(graft.ops.TsOps.cumProdPositive(lit(1.0) + col("chg"), wI))
+          .as("equity"))
+      .coalesce(1).sortWithinPartitions("industry", "day")
   }
 
   /** q99: survivorship split (the reference's parallel active /
@@ -2847,25 +2878,28 @@ object FactorQueries {
     * (`pages/2_Sentiment radar.py:159-163`): per-(day, industry)
     * constituent count, surge ("seal") count, max change, and
     * heat = Σ amount / 1e8, then `rank()` over each day by heat.
-    * One grouped-agg shuffle keyed (day, industry) feeding a window
-    * over the (tiny) sector×day frame. Heat sums `amount` (an exact
+    * One hash exchange keyed on `day` feeds both the grouped
+    * aggregate and the per-day rank window; the result is a one-task
+    * sort (see [[klineReplay]]). Heat sums `amount` (an exact
     * multiple of 1/256) so accumulation order can't move the rank
     * ordering; `chg` is fr6-quantized before the ≥5 surge compare. */
   def sectorLeaderboard: Q = (s, dir) => {
     val fr6c = (c: Column) => floor(c * 1e6 + lit(0.5)) / 1e6
     val W = Window.partitionBy("stock").orderBy("day")
     val prevC = lag(col("close"), 1).over(W)
-    val r = Quotes.panel(s, dir)
-      .withColumn("chg",
-        fr6c((when(prevC =!= 0.0, col("close") / prevC) - lit(1.0)) * 100.0))
-    val g = r.groupBy("day", "industry").agg(
-      count(lit(1)).as("n_stocks"),
-      sum(when(col("chg") >= 5.0, 1L).otherwise(0L)).as("n_surge"),
-      max(col("chg")).as("max_chg"),
-      fr6c(sum(col("amount")) / 1e8).as("heat"))
-    g.withColumn("rnk", rank().over(
+    Quotes.panel(s, dir)
+      .select(col("day"), col("industry"), col("amount"),
+        fr6c((when(prevC =!= 0.0, col("close") / prevC) - lit(1.0)) * 100.0)
+          .as("chg"))
+      .repartition(col("day"))
+      .groupBy("day", "industry").agg(
+        count(lit(1)).as("n_stocks"),
+        sum(when(col("chg") >= 5.0, 1L).otherwise(0L)).as("n_surge"),
+        max(col("chg")).as("max_chg"),
+        fr6c(sum(col("amount")) / 1e8).as("heat"))
+      .withColumn("rnk", rank().over(
         Window.partitionBy("day").orderBy(col("heat").desc, col("industry"))))
-      .orderBy("day", "industry")
+      .coalesce(1).sortWithinPartitions("day", "industry")
   }
 
   val entries: Map[String, Q] = Map(

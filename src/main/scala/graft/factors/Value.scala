@@ -30,6 +30,9 @@ object Value {
     // exact): engine-proof vs the built-in's incremental moments
     div(c - avg(c).over(t(60)), graft.ops.TsOps.tsStddevCf(c, 60, W))
 
+  /** ROE proxy: pb / pe on the panel row (null when pe is 0). */
+  val roeTtm: Column = div(col("pb"), col("pe"))
+
   def compute(quotes: DataFrame): DataFrame =
     quotes
       .withColumn("ln_market_cap", log(col("total_mv")))
@@ -37,7 +40,7 @@ object Value {
       .withColumn("bp_lr", div(lit(1.0), col("pb")))
       .withColumn("sp_ttm", div(lit(1.0), col("ps")))
       .withColumn("dividend_yield", col("dv_ratio"))
-      .withColumn("roe_ttm", div(col("pb"), col("pe")))
+      .withColumn("roe_ttm", roeTtm)
       .withColumn("pe_zscore_60", zscore60(col("pe")))
       .withColumn("pb_zscore_60", zscore60(col("pb")))
 

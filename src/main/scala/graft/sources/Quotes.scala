@@ -41,33 +41,44 @@ object Quotes {
 
   /** The session-resident panel for (session, source dir): the first
     * call builds and persists it, later calls return that Dataset. */
-  def panel(spark: SparkSession, sfDir: String): DataFrame = {
+  def panel(spark: SparkSession, sfDir: String): DataFrame =
+    resident(spark, sfDir, "panel")(build(spark, sfDir))
+
+  /** The session-resident frame `name` for (session, source dir):
+    * `make` runs once and returns a persisted frame, later calls
+    * return that Dataset, and stopping the session unpersists it. The
+    * panel and the factor frame of the snapshot and screener pages
+    * live here. Invariant, as for the panel: a source dir is
+    * immutable within a session. */
+  def resident(spark: SparkSession, sfDir: String, name: String)(
+      make: => DataFrame): DataFrame = {
     // computeIfAbsent only allocates the holder (cheap): the build
     // runs OUTSIDE the map's bin lock, under the holder's lazy-val
     // lock, so the nightly backfill's concurrent family builds share
     // one panel and a first call for another key never waits on it
-    residents.computeIfAbsent((spark, sfDir), { case (ss, d) =>
-      new Resident(build(ss, d))
+    residents.computeIfAbsent((spark, sfDir, name), _ => {
+      hookCleanup(spark)
+      new Resident(make)
     }).frame
   }
 
-  /** One memo entry; `built` is set once the panel exists, so cleanup
+  /** One memo entry; `built` is set once the frame exists, so cleanup
     * unpersists only what was actually built. */
   private[sources] final class Resident(make: => DataFrame) {
     @volatile var built: Option[DataFrame] = None
     lazy val frame: DataFrame = { val f = make; built = Some(f); f }
   }
 
-  private[sources] val residents =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Resident]()
+  private[sources] val residents = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, String), Resident]()
 
   /** Sessions whose cleanup listener is on the bus: one per session. */
   private val cleanupHooked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
 
-  private def build(spark: SparkSession, sfDir: String): DataFrame = {
-    // drop and unpersist this session's panels when it stops: a
-    // long-lived JVM (test suites) otherwise pins dead sessions' frames
+  /** Drop and unpersist the session's frames when it stops: a
+    * long-lived JVM (test suites) otherwise pins dead sessions' frames. */
+  private def hookCleanup(spark: SparkSession): Unit =
     if (cleanupHooked.add(spark))
       spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
@@ -82,6 +93,8 @@ object Quotes {
           gone.forEach(_.built.foreach(_.unpersist(blocking = false)))
         }
       })
+
+  private def build(spark: SparkSession, sfDir: String): DataFrame = {
     // cache with the partition layout the uncached derivation runs
     // with: Spark otherwise plans a cached query with AQE's partition
     // coalescing off, and the changed row order across partitions moves

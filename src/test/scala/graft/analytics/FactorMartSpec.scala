@@ -223,6 +223,31 @@ class FactorMartSpec extends SparkSpec {
     }
   }
 
+  test("the source fingerprint equals the recursive listFiles walk, byte for byte") {
+    // the fork-free listStatus walk must keep every manifest already
+    // on disk valid: same files (checksum sidecars hidden, _SUCCESS
+    // kept), same relative paths, same string
+    val d = graft.TempDirs.scratch("graft_fingerprint_src")
+    spark.range(40).withColumn("p", col("id") % 3)
+      .write.partitionBy("p").mode("overwrite").parquet(s"$d/t.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "events.parquet"),
+      java.nio.file.Paths.get(d, "events.parquet"))
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val base = fs.makeQualified(new org.apache.hadoop.fs.Path(d))
+    val prefix = base.toUri.getPath
+    val it = fs.listFiles(base, true)
+    val items = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (it.hasNext) {
+      val st = it.next()
+      val rel = st.getPath.toUri.getPath.stripPrefix(prefix).stripPrefix("/")
+      items += s"$rel:${st.getLen}:${st.getModificationTime}"
+    }
+    assert(items.exists(_.startsWith("t.parquet/p=1/")) && items.exists(_.contains("_SUCCESS")))
+    val old = java.security.MessageDigest.getInstance("MD5")
+      .digest(items.sorted.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(FactorQueries.dirFingerprint(d) == old)
+  }
+
   test("same-basename source dirs get DISTINCT persistent mart paths") {
     // r16 ADVICE item 1: /a/sf0.1 and /b/sf0.1 must never share a
     // mart — the path carries a canonical-path digest (and the

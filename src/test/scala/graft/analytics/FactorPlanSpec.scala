@@ -81,38 +81,56 @@ class FactorPlanSpec extends SparkSpec {
   test("screener mask: factor sides broadcast, no residual shuffle joins") {
     val plan = PlanAudit.finalPlan(
       FactorQueries.screenerMask(spark, "/root/testdata/sf0.001"))
-    // the day-snapshot filter makes every factor side tiny -> all four
-    // joins must be broadcast (null-rejecting mask lets Catalyst turn
-    // the LEFT joins inner; either join type is fine, shuffle is not)
+    // the factor side is the session-resident factor frame: its one
+    // snapshot-filtered join is broadcast (the null-rejecting mask lets
+    // Catalyst turn the LEFT join inner; either type is fine, a
+    // shuffle is not), and no exchange of any kind remains
     assert(!plan.contains("SortMergeJoin"), plan)
-    assert(plan.linesIterator.count(_.contains("BroadcastHashJoin")) >= 4, plan)
+    assert(plan.linesIterator.count(_.contains("BroadcastHashJoin")) == 1, plan)
+    assert(!plan.contains("Exchange hashpartitioning") &&
+      !plan.contains("Exchange rangepartitioning"), plan)
   }
 
-  test("q56 snapshot: one technical-mart scan, point filter pushed to every mart") {
+  test("q56 snapshot: frame reads each mart once, point filter both sides") {
     val dir = "/root/testdata/sf0.001"
     FactorQueries.primeFactorMarts(spark, dir)
+    // the frame is built once per (session, dir): its plan reads each
+    // of the four family marts exactly once, the technical mart
+    // included for both trend and oscillator columns
+    val frame = FactorQueries.factorFrame(spark, dir).queryExecution.analyzed
+    val scans = frame.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect {
+      case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        r.location.rootPaths.mkString(",")
+    }.filter(_.contains("graft_factor_mart_"))
+    Seq("technical", "momentum", "value", "sentiment").foreach { fam =>
+      assert(scans.count(_.contains(s"graft_factor_mart_$fam")) == 1, frame)
+    }
+    assert(scans.size == 4, frame)
+    // a request reads the two cached relations, never a mart, and the
+    // (stock, day) point filter sits on both sides: LocalSession turns
+    // constraint propagation off, so nothing infers it across the join
     val plan = PlanAudit.finalPlan(FactorQueries.factorSnapshot(spark, dir))
-    val scans = plan.linesIterator.filter(_.contains("graft_factor_mart_")).toSeq
-    // trend + oscillator columns come from ONE read of the technical mart
-    assert(scans.count(_.contains("graft_factor_mart_technical")) == 1, plan)
-    assert(scans.size == 3, plan)
-    // the one-row snapshot never reads a whole mart: the (stock, day)
-    // point filter reaches each mart scan as pushed parquet filters
-    scans.foreach { l =>
-      val pushed = l.split("PushedFilters: ")(1)
-      assert(pushed.contains("EqualTo(stock,7)") && pushed.contains("EqualTo(day,40)"), l)
+    assert(!plan.contains("graft_factor_mart_"), plan)
+    val sides = plan.linesIterator.filter(_.contains("InMemoryTableScan")).toSeq
+    assert(sides.size == 2, plan)
+    sides.foreach { l =>
+      assert(l.matches(".*\\(stock#\\d+L? = 7\\).*") && l.matches(".*\\(day#\\d+L? = 40\\).*"), l)
     }
   }
 
-  test("sector equity: one industry-day agg exchange + one industry window") {
+  test("sector equity: one industry exchange feeds agg and window") {
     val plan = PlanAudit.finalPlan(
       FactorQueries.sectorEquityCurve(spark, "/root/testdata/sf0.001"),
       throughCache = true)
     val ex = plan.linesIterator.filter(l =>
       l.contains("Exchange hashpartitioning") && !l.contains("ReusedExchange")).toSeq
-    // stock window + (industry, day) agg + industry window = 3 keyed
-    // exchanges end-to-end; anything more is a regression
-    assert(ex.size <= 3, ex.mkString("\n"))
+    // the cached panel's stock exchange + one industry exchange that
+    // both the (industry, day) aggregate and the industry window use;
+    // anything more is a regression
+    assert(ex.size <= 2, ex.mkString("\n"))
+    assert(ex.count(_.contains("hashpartitioning(industry")) == 1, ex.mkString("\n"))
   }
 
   test("q58/q90/q91 read the factor MART, never re-deriving the alpha DAG") {

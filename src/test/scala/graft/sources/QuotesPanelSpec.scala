@@ -9,7 +9,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** The session-resident quotes panel: one persisted, stock-partitioned
   * Dataset per (session, source dir), identical to the uncached
-  * derivation, dropped when its session stops. */
+  * derivation, dropped when its session stops — and the factor frame
+  * that shares its holder and cleanup. */
 class QuotesPanelSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
@@ -28,17 +29,23 @@ class QuotesPanelSpec extends SparkSpec {
       case r: InMemoryRelation => r.cacheBuilder: AnyRef
     }.toSet
 
-  test("calls share one Dataset backed by one cached relation, also when concurrent") {
-    val dir = freshDir()
+  /** Five calls of `first` released at once: the concurrent first
+    * calls of a resident that no one has built yet. */
+  private def concurrentFirsts(first: () => DataFrame): Seq[DataFrame] = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-    val firsts = try {
+    try {
       val start = new java.util.concurrent.CountDownLatch(1)
       val calls = (1 to 5).map(_ => pool.submit(new java.util.concurrent.Callable[DataFrame] {
-        override def call(): DataFrame = { start.await(); Quotes.panel(spark, dir) }
+        override def call(): DataFrame = { start.await(); first() }
       }))
       start.countDown()
       calls.map(_.get())
     } finally pool.shutdown()
+  }
+
+  test("calls share one Dataset backed by one cached relation, also when concurrent") {
+    val dir = freshDir()
+    val firsts = concurrentFirsts(() => Quotes.panel(spark, dir))
     val p = firsts.head
     assert(firsts.forall(_ eq p))
     assert(Quotes.panel(spark, dir) eq p)
@@ -46,6 +53,19 @@ class QuotesPanelSpec extends SparkSpec {
     assert(firsts.flatMap(f => cachedRelations(f.select("stock", "close"))).toSet.size == 1)
     val rows = p.count()
     assert(rows > 0 && Quotes.panel(spark, dir).count() == rows)
+  }
+
+  test("the factor frame: concurrent first calls build one persisted frame") {
+    val dir = freshDir()
+    val firsts = concurrentFirsts(() => graft.analytics.FactorQueries.factorFrame(spark, dir))
+    val f = firsts.head
+    assert(firsts.forall(_ eq f))
+    assert(graft.analytics.FactorQueries.factorFrame(spark, dir) eq f)
+    assert(f.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(cachedRelations(f.select("stock", "rsi_14")).size == 1)
+    // one row per panel key: the pages' LEFT joins to it add no rows
+    val keys = Quotes.panel(spark, dir).select("stock", "day")
+    assert(f.count() == keys.count() && f.select("stock", "day").distinct().count() == f.count())
   }
 
   test("a stock-keyed lag over the panel plans no exchange") {
@@ -79,14 +99,22 @@ class QuotesPanelSpec extends SparkSpec {
     val old = spark
     val before = Quotes.panel(old, sf)
     val rows = before.count()
+    val frameBefore = graft.analytics.FactorQueries.factorFrame(old, sf)
+    assert(frameBefore.count() == rows)
     old.stop()
     // stop() drains the listener bus, so the cleanup has run
     assert(!Quotes.residents.keySet.stream.anyMatch(_._1 eq old))
+    assert(before.storageLevel == StorageLevel.NONE)
+    assert(frameBefore.storageLevel == StorageLevel.NONE)
     val fresh: SparkSession = SparkSpec.session
     assert(!(fresh eq old))
     val after = Quotes.panel(fresh, sf)
     assert(!(after eq before) && (after.sparkSession eq fresh))
     assert(after.storageLevel == StorageLevel.MEMORY_AND_DISK)
     assert(after.count() == rows)
+    val frameAfter = graft.analytics.FactorQueries.factorFrame(fresh, sf)
+    assert(!(frameAfter eq frameBefore) && (frameAfter.sparkSession eq fresh))
+    assert(frameAfter.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(frameAfter.count() == rows)
   }
 }
