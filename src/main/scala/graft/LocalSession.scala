@@ -3,10 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE local-mode session builder behind every runnable main
-  * (Verify, PlanAudit, ScaleAudit, SynthScale, the race probes) and
-  * the perfbench harness. A conf block copied per main drifts: a
-  * measured tuning applied to some copies silently unbalances the
-  * comparison between them.
+  * (Verify and the race probes) and the perfbench harness. A conf
+  * block copied per main drifts: a measured tuning applied to some
+  * copies silently unbalances the comparison between them.
   *
   * Every setting here is LOCAL-MODE tuning for the driver's
   * single-JVM `local[32]` box. A real multi-executor cluster keeps

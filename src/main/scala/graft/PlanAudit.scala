@@ -2,14 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Plan audit over every driver entry (builder tooling): executes
-  * each query at a tiny SF and prints its shuffle/sort/broadcast
-  * operator counts, so plan regressions (a new exchange, a lost
-  * broadcast) surface as a diff in one table. The same signature
-  * feeds the golden regression corpus (PlanGoldenSpec +
-  * src/test/resources/plan_golden.tsv): a Spark version bump or AQE
-  * change that silently reshapes a plan fails a test instead of a
-  * future bench. */
+/** Plan audit over every driver entry: the final plan text of an
+  * executed query and its shuffle/sort/broadcast operator counts, so
+  * plan regressions (a new exchange, a lost broadcast) surface as a
+  * diff. The signature feeds the golden regression corpus
+  * (PlanGoldenSpec + src/test/resources/plan_golden.tsv): a Spark
+  * version bump or AQE change that silently reshapes a plan fails a
+  * test instead of a future bench. */
 object PlanAudit {
 
   /** The FINAL adaptive plan, after execution has fixed AQE's
@@ -27,23 +26,29 @@ object PlanAudit {
   /** Drops every `== Initial Plan ==` section of an adaptive plan's
     * text, at any nesting depth, and — unless `throughCache` — the
     * subtree printed under each `InMemoryTableScan`. A node's subtree
-    * is the lines after it indented deeper than its name; a section's
-    * body starts at the marker's own indent. */
+    * is the lines after it indented deeper than its name. A section's
+    * body is the lines after its marker that start with blanks up to
+    * the marker's text: a nested adaptive plan prints its markers and
+    * bodies without the enclosing tree's prefix, so a later line of
+    * the enclosing tree (a sibling join side) can be indented deeper
+    * than the marker and still lie outside the section — its prefix
+    * carries the enclosing tree's branch marks. */
   private[graft] def finalSections(plan: String, throughCache: Boolean): String = {
-    var cut = Int.MaxValue // lines indented this deep or deeper are dropped
-    plan.linesIterator
-      .map(l => l -> l.indexWhere(c => !" :+-".contains(c)))
-      .filter { case (l, i) =>
-        if (i < 0 || i >= cut) false
-        else {
-          val body = l.substring(i)
-          cut =
-            if (body.startsWith("== Initial Plan ==")) i
-            else if (!throughCache && body.startsWith("InMemoryTableScan")) i + 1
-            else Int.MaxValue
-          cut != i
-        }
-      }.map(_._1).mkString("\n")
+    var dropped: String => Boolean = _ => false // inside the cut subtree
+    plan.linesIterator.filter { l =>
+      val i = l.indexWhere(c => !" :+-".contains(c))
+      if (i < 0 || dropped(l)) false
+      else {
+        val body = l.substring(i)
+        val initial = body.startsWith("== Initial Plan ==")
+        dropped =
+          if (initial) { val pad = " " * i; _.startsWith(pad) }
+          else if (!throughCache && body.startsWith("InMemoryTableScan"))
+            _.indexWhere(c => !" :+-".contains(c)) > i
+          else _ => false
+        !initial
+      }
+    }.mkString("\n")
   }
 
   /** Normalized operator-count signature: exchanges by kind (reused
@@ -85,19 +90,5 @@ object PlanAudit {
     val skip = graft.streaming.StreamQueries.entries.keySet
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => skip(name) }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = LocalSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try println(f"AUDIT $name%-28s ${signature(finalPlan(fn(spark, sfDir)))}")
-      catch {
-        case e: Exception => println(s"AUDIT $name FAILED: ${e.getMessage}")
-      }
-    }
-    spark.stop()
   }
 }

@@ -45,31 +45,4 @@ object TempDirs {
       finally st.close()
     }
   }
-
-  /** Scratch roots built once per key and memoized (the streamed
-    * entries' store and replay-file seeds). The root is allocated
-    * eagerly (`preferShm`) and built lazily on the first call; later
-    * calls return it without building. A build that throws leaves
-    * its root EMPTY and stays unmemoized, so the next call rebuilds
-    * into the same root — seed writes are ErrorIfExists by design,
-    * and leftovers of a partial build would fail every retry. */
-  final class BuiltRoots[K](prefix: K => String) {
-    private val holders = new java.util.concurrent.ConcurrentHashMap[K, () => String]()
-
-    def apply(key: K)(build: String => Unit): String =
-      holders.computeIfAbsent(key, { k =>
-        val r = scratch(prefix(k), preferShm = true)
-        lazy val built: String =
-          try { build(r); r }
-          catch { case e: Throwable =>
-            try { deleteRecursively(Paths.get(r)); Files.createDirectories(Paths.get(r)) }
-            catch { case _: Exception => () }
-            throw e
-          }
-        () => built
-      })()
-
-    /** Forget every key matching `p` (its root stays until JVM exit). */
-    def forgetIf(p: K => Boolean): Unit = { holders.keySet.removeIf(k => p(k)); () }
-  }
 }

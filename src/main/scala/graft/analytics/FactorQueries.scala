@@ -677,8 +677,9 @@ object FactorQueries {
   // straight from the BASE seed (read-only for the stream); specs
   // keep driving [[streamScaffold]] directly with explicit roots —
   // seeding is an entry concern.
-  private val streamSeed = new graft.TempDirs.BuiltRoots[
-    (SparkSession, String, String)](k => s"graft_seed_${k._3}")
+  private def streamSeed(s: SparkSession, dir: String, name: String)(
+      build: String => Unit): String =
+    graft.Residents.root(s, ("stream-seed", dir, name), s"graft_seed_$name")(build)
 
   /** Recursive copy, excluding top-level entries in `exclude`.
     * Directories are created in walk order first, then the FILE
@@ -741,7 +742,7 @@ object FactorQueries {
   /** The shared base seed: bars + first-bar registry + replay files
     * for (session, dir) — identical across families, built once. */
   private def baseStreamSeed(s: SparkSession, dir: String): String =
-    streamSeed((s, dir, "base")) { r =>
+    streamSeed(s, dir, "base") { r =>
       seedStores(s, Quotes.panel(s, dir), r); ()
     }
 
@@ -749,7 +750,7 @@ object FactorQueries {
     * state snapshot, where the family keeps one). */
   private def familyStreamSeed(s: SparkSession, dir: String, family: String,
       buildHistorical: (String, Long) => Unit): String =
-    streamSeed((s, dir, family)) { r =>
+    streamSeed(s, dir, family) { r =>
       copyTree(baseStreamSeed(s, dir), r, exclude = Set("in"))
       buildHistorical(r, seedCut(r))
     }
@@ -759,13 +760,11 @@ object FactorQueries {
     * against a fresh checkpoint, return the run root for the mart
     * read. The memoized seed makes a repeat run cost copy +
     * maintenance only. At most ONE run root per (session, dir,
-    * family) stays on disk: a new run deletes its predecessor first —
-    * /dev/shm must not accumulate a full store copy per invocation
-    * (r19 review finding). Contract: a returned frame is consumed
-    * before the same entry runs again (Verify and perfbench both do). */
-  private val lastRunRoot = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), String]()
-
+    * family) stays on disk: a new run forgets its predecessor's
+    * resident entry first, which deletes that root — /dev/shm must not
+    * accumulate a full store copy per invocation (r19 review finding).
+    * Contract: a returned frame is consumed before the same entry runs
+    * again (Verify and perfbench both do). */
   private def runFromSeed(s: SparkSession, dir: String, family: String,
       buildHistorical: (String, Long) => Unit,
       onBatch: String => (DataFrame, Long) => Unit,
@@ -778,15 +777,12 @@ object FactorQueries {
     // before the stream starts (q174 plants its fragmented partition
     // there — the immutable seed stays pristine)
     val key = runKey.getOrElse(family)
-    val run = graft.TempDirs.scratch(s"graft_srun_$key", preferShm = true)
-    Option(lastRunRoot.put((s, dir, key), run)).foreach { prev =>
-      try deleteRecursively(java.nio.file.Paths.get(prev))
-      catch { case _: Exception => () }
+    graft.Residents.forget(s, ("stream-run", dir, key))
+    graft.Residents.root(s, ("stream-run", dir, key), s"graft_srun_$key") { run =>
+      copyTree(seed, run)
+      afterCopy(run)
+      streamStart(s, run, s"${baseStreamSeed(s, dir)}/in", onBatch(run))(None)
     }
-    copyTree(seed, run)
-    afterCopy(run)
-    streamStart(s, run, s"${baseStreamSeed(s, dir)}/in", onBatch(run))(None)
-    run
   }
 
   /** q167 harness on [[streamScaffold]]: per non-empty batch, one
@@ -1756,78 +1752,41 @@ object FactorQueries {
   private def alphaFullOutCols =
     Seq(col("stock"), col("day")) ++ Alpha101.columns.map(col)
 
-  /** The plan-once template, memoized per (session, input schema):
-    * the full 101-alpha DAG analyzed over an empty all-nullable
-    * stand-in, built exactly once and swapped onto every consumer's
-    * input ([[org.apache.spark.sql.graftbridge.PlanBridge.swapLeaf]]).
-    * Session-scoped so the entry's repeat runs skip the
-    * multi-second build entirely. */
-  private val alphaTemplateCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Seq[(String, org.apache.spark.sql.types.DataType)]),
-    () => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
-
-  /** Evict cached templates whose session matches `stopped` and return
-    * the count removed. The production call site passes
-    * `_.sparkContext.isStopped` (r19 verdict ask #5: a long-lived JVM
-    * cycling sessions — a notebook server — must not retain a ~500-
-    * column analyzed plan per dead session); the predicate is the seam
-    * SwapLeafSpec pins the mechanism through, since a unit suite
-    * cannot stop its one shared SparkContext. */
-  private[graft] def evictTemplates(stopped: SparkSession => Boolean): Int = {
-    val before = alphaTemplateCache.size
-    alphaTemplateCache.keySet.removeIf(k => stopped(k._1))
-    before - alphaTemplateCache.size
-  }
-
-  /** The sessions currently holding a cached template (spec probe). */
-  private[graft] def templateSessions: Set[SparkSession] = {
-    import scala.jdk.CollectionConverters._
-    alphaTemplateCache.keySet.asScala.map(_._1).toSet
-  }
-
-  /** Force the q171 template for (session, schema) into cache — the
-    * spec's rebuild-after-eviction probe. */
-  private[graft] def forceAlphaTemplate(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    alphaFullTemplate(s, schema); ()
-  }
-
+  /** The plan-once template, a [[graft.Residents]] entry per (session,
+    * input schema): the full 101-alpha DAG analyzed over an empty
+    * all-nullable stand-in, built exactly once and swapped onto every
+    * consumer's input
+    * ([[org.apache.spark.sql.graftbridge.PlanBridge.swapLeaf]]).
+    * Session-scoped so the entry's repeat runs skip the multi-second
+    * build entirely, and released with its session, so a long-lived
+    * JVM cycling sessions never retains a ~500-column plan per dead
+    * session (r19 verdict ask #5). Keyed on names AND types: a
+    * same-named column with a different type in another dir must
+    * build its own template, not trip swapLeaf's type require against
+    * a stale one (r19 review). */
   private def alphaFullTemplate(s: SparkSession,
       schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    // a stopped session's template can never be swapped again (its
-    // plans die with the session) — drop such entries before adding
-    // new ones so session churn cannot accumulate dead plans
-    evictTemplates(_.sparkContext.isStopped)
-    // keyed on names AND types: a same-named column with a different
-    // type in another dir must build its own template, not trip
-    // swapLeaf's type require against a stale one (r19 review)
-    val holder = alphaTemplateCache.computeIfAbsent(
-      (s, schema.fields.map(f => f.name -> f.dataType).toSeq), { _ =>
-        lazy val plan = {
-          // r21: cache the OPTIMIZED template, not just the analyzed
-          // one — each per-batch swap re-ran the optimizer to fixpoint
-          // over the raw ~500-column nested-project DAG (~1 s per
-          // micro-batch, × 3 batches × the historical build; the q171
-          // entries are driver-constant-bound per the r20 scaling
-          // block). Optimizing once over a NON-foldable empty stand-in
-          // (LogicalRDD — an empty LocalRelation would collapse under
-          // PropagateEmptyRelation) leaves each swap's re-optimization
-          // a near-fixpoint pass. The optimizer is semantics-
-          // preserving and float arithmetic is never reassociated, so
-          // the swapped plan computes bit-identical values — gated by
-          // the full DuckDB oracle (q169/q171 hash-exact) and
-          // StreamMartSpec's streamed-vs-scratch pins.
-          val standIn = org.apache.spark.sql.graftbridge.PlanBridge
-            .nonFoldableStandIn(s, org.apache.spark.sql.types.StructType(
-              schema.fields.map(_.copy(nullable = true))))
-          org.apache.spark.sql.graftbridge.PlanBridge.optimized(
-            Alpha101.compute(standIn).select(alphaFullOutCols: _*))
-        }
-        () => plan
-      })
-    holder()
-  }
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    graft.Residents(s, ("alpha-template", schema.fields.map(f => f.name -> f.dataType).toSeq)) {
+      // r21: cache the OPTIMIZED template, not just the analyzed
+      // one — each per-batch swap re-ran the optimizer to fixpoint
+      // over the raw ~500-column nested-project DAG (~1 s per
+      // micro-batch, × 3 batches × the historical build; the q171
+      // entries are driver-constant-bound per the r20 scaling
+      // block). Optimizing once over a NON-foldable empty stand-in
+      // (LogicalRDD — an empty LocalRelation would collapse under
+      // PropagateEmptyRelation) leaves each swap's re-optimization
+      // a near-fixpoint pass. The optimizer is semantics-
+      // preserving and float arithmetic is never reassociated, so
+      // the swapped plan computes bit-identical values — gated by
+      // the full DuckDB oracle (q169/q171 hash-exact) and
+      // StreamMartSpec's streamed-vs-scratch pins.
+      val standIn = org.apache.spark.sql.graftbridge.PlanBridge
+        .nonFoldableStandIn(s, org.apache.spark.sql.types.StructType(
+          schema.fields.map(_.copy(nullable = true))))
+      org.apache.spark.sql.graftbridge.PlanBridge.optimized(
+        Alpha101.compute(standIn).select(alphaFullOutCols: _*))
+    }
 
   private def alphaFullHistorical(s: SparkSession,
       schema: org.apache.spark.sql.types.StructType,
@@ -2121,8 +2080,8 @@ object FactorQueries {
   /** The factor frame the snapshot (q56) and screener (q92) pages
     * read: the panel's `(stock, day)` axis LEFT-joined with the
     * technical, momentum, value and sentiment marts, built once per
-    * (session, dir) and persisted as a [[Quotes.resident]] next to
-    * the panel. A page joins its panel side to this frame on
+    * (session, dir) and persisted next to the panel in
+    * [[graft.Residents]]. A page joins its panel side to this frame on
     * `(stock, day)` — the same rows the chained per-mart LEFT joins
     * gave, since the frame holds exactly one row per panel key —
     * instead of re-reading and broadcasting four marts per request.
@@ -2130,7 +2089,7 @@ object FactorQueries {
     * entries (q40/q41, q44, q45); the sentiment flags are integers,
     * read as stored (q61). */
   private[graft] def factorFrame(s: SparkSession, dir: String): DataFrame =
-    Quotes.resident(s, dir, "factors") {
+    graft.Residents.frame(s, ("factors", dir)) {
       Seq(
         technicalDataset -> Seq("ma_5", "ma_20", "ma_60", "bias_20", "rsi_14",
           "cci_14", "wr_14").map(r6),
@@ -2275,8 +2234,7 @@ object FactorQueries {
   /** Build ALL factor marts for (session, dir) NOW — the alpha panel
     * plus the five basic-factor families — so a caller pays the
     * one-time build up front instead of inside whichever consumer
-    * happens to run first (FactorPlanSpec and ScaleAudit prime with
-    * it). */
+    * happens to run first (FactorPlanSpec primes with it). */
   def primeFactorMarts(s: SparkSession, dir: String): Unit = {
     // builds are independent (six distinct memo keys, six scratch
     // dirs) — run them CONCURRENTLY so the five small family builds
@@ -2345,27 +2303,17 @@ object FactorQueries {
     alphaDataset, technicalDataset, emaDataset, momentumDataset,
     valueDataset, sentimentDataset)
 
-  private val martCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), () => DataFrame]()
-
   private[analytics] def alphaFull(s: SparkSession, dir: String): DataFrame =
     martFrame(s, dir, alphaDataset)
 
   /** The memoized mart frame for (session, dir, dataset): first call
     * builds (or validates-and-reuses a persistent mart), later calls
-    * return the same parquet-backed frame. */
+    * return the same parquet-backed frame ([[graft.Residents]]: a
+    * concurrent first call for a DIFFERENT dataset never waits on
+    * this one's multi-second build). */
   private[analytics] def martFrame(s: SparkSession, dir: String,
-      ds: MartDataset): DataFrame = {
-    // computeIfAbsent only allocates a memoizing holder (cheap): the
-    // multi-second build runs OUTSIDE the map's bin lock, under
-    // the holder's own per-key lazy-val lock, so a concurrent first
-    // call for a DIFFERENT key never blocks behind it
-    val holder = martCache.computeIfAbsent((s, dir, ds.name), { case (ss, d, _) =>
-      lazy val frame = buildFactorMart(ss, d, ds)
-      () => frame
-    })
-    holder()
-  }
+      ds: MartDataset): DataFrame =
+    graft.Residents(s, ("mart", dir, ds.name))(buildFactorMart(s, dir, ds))
 
   /** The factor MART (r15 verdict ask #1 — the reference's actual
     * architecture): alphas are computed ONCE per (session, dir) and
@@ -2393,30 +2341,8 @@ object FactorQueries {
     * No one-shot codegen override in the derive (kept from r9–r15
     * measurements: the batched-rank plan is ~30 operators; stock
     * codegen beats NO_CODEGEN factories 41 s vs 49 s at sf0.1). */
-  /** Sessions whose cache-cleanup listener is already registered —
-    * one listener per session, not one per (dataset, rebuild): the
-    * six-dataset split would otherwise stack 6+ identical listeners
-    * per session on the bus. */
-  private val cleanupHooked: java.util.Set[SparkSession] =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-
   private def buildFactorMart(ss: SparkSession, d: String,
       ds: MartDataset): DataFrame = {
-    // drop this session's entries when it stops: a long-lived JVM
-    // (test suites) otherwise pins memo entries of dead sessions in
-    // the map forever
-    if (cleanupHooked.add(ss))
-      ss.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          martCache.keySet.removeIf(_._1 eq ss)
-          streamSeed.forgetIf(_._1 eq ss)
-          alphaTemplateCache.keySet.removeIf(_._1 eq ss)
-          lastRunRoot.keySet.removeIf(_._1 eq ss)
-          cleanupHooked.remove(ss)
-        }
-      })
     // Deployment seam: SPARK_GRAFT_MART_DIR makes the mart a REAL
     // persistent mart — written once, REUSED by every later session
     // whose staleness manifest matches (see [[buildMartAt]]).
@@ -2441,8 +2367,8 @@ object FactorQueries {
     * mart short-circuits the build, so with the root in play a timed
     * backfill would measure a _SUCCESS-gated READ, and a test would
     * read whatever an earlier process left there (r16 ADVICE item 2).
-    * Irreversible by design; perfbench's nightly job, ScaleAudit and
-    * SparkSpec call it before any build. */
+    * Irreversible by design; perfbench's nightly job and SparkSpec
+    * call it before any build. */
   def ignorePersistentMartRoot(): Unit = { persistentRootIgnored = true }
   @volatile private var persistentRootIgnored = false
 

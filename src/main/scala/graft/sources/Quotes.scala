@@ -34,65 +34,16 @@ import org.apache.spark.storage.StorageLevel
   * SURVEY §3.1, as Shark-style cached co-partitioned storage). The
   * cached relation keeps the exchange's `hashpartitioning(stock)`, so
   * stock-keyed windows, lags and joins over it plan no exchange.
-  * Invariant, as for the factor-mart memo: a source dir is immutable
-  * within a session — rewrite data under a fresh dir.
+  * Invariant, as for every [[graft.Residents]] entry: a source dir is
+  * immutable within a session — rewrite data under a fresh dir.
   */
 object Quotes {
 
   /** The session-resident panel for (session, source dir): the first
-    * call builds and persists it, later calls return that Dataset. */
+    * call builds and persists it, later calls return that Dataset, and
+    * stopping the session unpersists it ([[graft.Residents]]). */
   def panel(spark: SparkSession, sfDir: String): DataFrame =
-    resident(spark, sfDir, "panel")(build(spark, sfDir))
-
-  /** The session-resident frame `name` for (session, source dir):
-    * `make` runs once and returns a persisted frame, later calls
-    * return that Dataset, and stopping the session unpersists it. The
-    * panel and the factor frame of the snapshot and screener pages
-    * live here. Invariant, as for the panel: a source dir is
-    * immutable within a session. */
-  def resident(spark: SparkSession, sfDir: String, name: String)(
-      make: => DataFrame): DataFrame = {
-    // computeIfAbsent only allocates the holder (cheap): the build
-    // runs OUTSIDE the map's bin lock, under the holder's lazy-val
-    // lock, so the nightly backfill's concurrent family builds share
-    // one panel and a first call for another key never waits on it
-    residents.computeIfAbsent((spark, sfDir, name), _ => {
-      hookCleanup(spark)
-      new Resident(make)
-    }).frame
-  }
-
-  /** One memo entry; `built` is set once the frame exists, so cleanup
-    * unpersists only what was actually built. */
-  private[sources] final class Resident(make: => DataFrame) {
-    @volatile var built: Option[DataFrame] = None
-    lazy val frame: DataFrame = { val f = make; built = Some(f); f }
-  }
-
-  private[sources] val residents = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), Resident]()
-
-  /** Sessions whose cleanup listener is on the bus: one per session. */
-  private val cleanupHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
-  /** Drop and unpersist the session's frames when it stops: a
-    * long-lived JVM (test suites) otherwise pins dead sessions' frames. */
-  private def hookCleanup(spark: SparkSession): Unit =
-    if (cleanupHooked.add(spark))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          val gone = new java.util.ArrayList[Resident]()
-          residents.entrySet.removeIf { en =>
-            val mine = en.getKey._1 eq spark
-            if (mine) gone.add(en.getValue)
-            mine
-          }
-          cleanupHooked.remove(spark)
-          gone.forEach(_.built.foreach(_.unpersist(blocking = false)))
-        }
-      })
+    graft.Residents.frame(spark, ("panel", sfDir))(build(spark, sfDir))
 
   private def build(spark: SparkSession, sfDir: String): DataFrame = {
     // cache with the partition layout the uncached derivation runs

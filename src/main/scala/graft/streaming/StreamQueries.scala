@@ -45,7 +45,7 @@ object StreamQueries {
     * event time must be monotone across batches for exact replay,
     * StreamOps.emaStream). Memoized — see [[replaySeed]]. */
   private def emaReplaySeed(s: SparkSession, dir: String): String =
-    replaySeed((s, dir, "ema")) { r =>
+    replaySeed(s, dir, "ema") { r =>
       val slice = emaSlice(s, dir)
       Seq((lit(1), 22), (lit(23), 44), (lit(45), Int.MaxValue)).zipWithIndex
         .foreach { case ((lo, hi), i) =>
@@ -142,9 +142,11 @@ object StreamQueries {
     * root, exactly the [[graft.analytics.FactorQueries]] stream-seed
     * precedent (r18 verdict ask #6). Each run streams the immutable
     * seed files against a FRESH checkpoint + sink, so every run's
-    * stream still computes from the parquet inputs. */
-  private val replaySeed = new graft.TempDirs.BuiltRoots[
-    (SparkSession, String, String)](k => s"graft_replay_${k._3}")
+    * stream still computes from the parquet inputs. Each seed is a
+    * [[graft.Residents]] root, deleted when its session stops. */
+  private def replaySeed(s: SparkSession, dir: String, name: String)(
+      build: String => Unit): String =
+    graft.Residents.root(s, ("replay-seed", dir, name), s"graft_replay_$name")(build)
 
   /** The shared replay SOURCE: the memoized seed holds one batch
     * file per split condition (three sequential writes → increasing
@@ -157,7 +159,7 @@ object StreamQueries {
     * (see [[tsUtc]]). */
   private def replaySource(s: SparkSession, dir: String, name: String,
       ev: DataFrame, splits: (Long, Long) => Seq[Column]): () => DataFrame = {
-    val seedRoot = replaySeed((s, dir, name)) { r =>
+    val seedRoot = replaySeed(s, dir, name) { r =>
       // fixture transport (2 scalars for the split bounds), not
       // result materialization
       val mm = ev.agg(min(tsMicros(col("ts"))).as("lo"),

@@ -101,29 +101,4 @@ class SwapLeafSpec extends SparkSpec {
       PlanBridge.swapLeaf(spark, template, in)
     }
   }
-
-  test("template cache: stopped-session entries evict; a later consumer rebuilds") {
-    // the q171 template cache is keyed by SparkSession — a long-lived
-    // JVM cycling sessions must not retain a ~500-column analyzed
-    // plan per dead session (r19 verdict ask #5). The eviction
-    // predicate is a seam because a unit suite cannot stop its one
-    // shared SparkContext: production passes `_.sparkContext
-    // .isStopped`; this pin drives the same code path with an
-    // identity predicate and proves live-session survival, eviction,
-    // and rebuild-on-next-consumer.
-    import graft.analytics.FactorQueries
-    val schema = graft.sources.Quotes.panel(spark, "/root/testdata/sf0.001").schema
-    FactorQueries.evictTemplates(_ => true) // clean slate (other suites share the JVM)
-    FactorQueries.forceAlphaTemplate(spark, schema)
-    assert(FactorQueries.templateSessions.contains(spark))
-    // the production predicate leaves a LIVE session's template alone
-    assert(FactorQueries.evictTemplates(_.sparkContext.isStopped) == 0)
-    assert(FactorQueries.templateSessions.contains(spark))
-    // the same seam with this session marked dead: the entry goes
-    assert(FactorQueries.evictTemplates(_ eq spark) == 1)
-    assert(!FactorQueries.templateSessions.contains(spark))
-    // and a later consumer rebuilds instead of serving a stale entry
-    FactorQueries.forceAlphaTemplate(spark, schema)
-    assert(FactorQueries.templateSessions.contains(spark))
-  }
 }

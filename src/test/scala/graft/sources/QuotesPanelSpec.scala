@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{PlanAudit, SparkSpec}
+import graft.{PlanAudit, Residents, SparkSpec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.expressions.Window
@@ -10,7 +10,8 @@ import org.apache.spark.storage.StorageLevel
 /** The session-resident quotes panel: one persisted, stock-partitioned
   * Dataset per (session, source dir), identical to the uncached
   * derivation, dropped when its session stops — and the factor frame
-  * that shares its holder and cleanup. */
+  * next to it, and the session cleanup every [[graft.Residents]]
+  * entry shares. */
 class QuotesPanelSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
@@ -99,11 +100,22 @@ class QuotesPanelSpec extends SparkSpec {
     val old = spark
     val before = Quotes.panel(old, sf)
     val rows = before.count()
+    // the factor frame builds the technical, momentum, value and
+    // sentiment marts; the q95 entry builds its replay seed
     val frameBefore = graft.analytics.FactorQueries.factorFrame(old, sf)
     assert(frameBefore.count() == rows)
+    assert(graft.streaming.StreamQueries.emaStreamValues(old, sf).count() > 0)
+    val held = Residents.held(old)
+    assert(Set[Any]("panel", "factors", "mart", "replay-seed").subsetOf(
+      held.keySet.collect { case k: Product => k.productElement(0) }))
+    val seedRoot = held.collectFirst {
+      case (("replay-seed", `sf`, "ema"), Some(r: String)) => r
+    }.get
+    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(seedRoot)))
     old.stop()
     // stop() drains the listener bus, so the cleanup has run
-    assert(!Quotes.residents.keySet.stream.anyMatch(_._1 eq old))
+    assert(Residents.held(old).isEmpty)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(seedRoot)))
     assert(before.storageLevel == StorageLevel.NONE)
     assert(frameBefore.storageLevel == StorageLevel.NONE)
     val fresh: SparkSession = SparkSpec.session
