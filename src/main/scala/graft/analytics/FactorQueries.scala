@@ -26,15 +26,17 @@ object FactorQueries {
   private type Q = (SparkSession, String) => DataFrame
 
 
-  // floor-based 6-dp quantization, NOT engine round(): Spark rounds
-  // HALF_UP on the shortest decimal repr while DuckDB scales by 1e6
-  // first, and factor ratios DO land on exact 7-digit halves (q44's
-  // roc_60 hit 0.5046875 at sf0.1 — the two engines split the tie,
-  // r15 latent-divergence hunt). floor(x*1e6+0.5)/1e6 is the same
-  // two IEEE ops on both engines, so parity is by construction; the
-  // six factor oracles mirror it textually (see rf6's doc below).
-  private def r6(name: String) =
-    (floor(col(name) * 1e6 + lit(0.5)) / 1e6).as(name)
+  /** Floor-based 6-dp quantization, NOT engine round(): Spark rounds
+    * HALF_UP on the shortest decimal repr while DuckDB scales by 1e6
+    * first, and factor ratios DO land on exact 7-digit halves (q44's
+    * roc_60 hit 0.5046875 at sf0.1; rank-ratio alphas do too — the two
+    * engines split the tie). floor(x*1e6 + 0.5)/1e6 is the same
+    * correctly-rounded IEEE ops on both engines, so parity is by
+    * construction; the factor oracles mirror it textually. */
+  private def fr6(c: Column): Column = floor(c * 1e6 + lit(0.5)) / 1e6
+
+  /** [[fr6]] of a column by name, keeping the name. */
+  private def r6(name: String): Column = fr6(col(name)).as(name)
 
   /** The six basic-factor entries (q40–q45) read their FAMILY MARTS
     * (r16 verdict ask #2): the reference materializes the technical/
@@ -87,15 +89,6 @@ object FactorQueries {
   /** q45: value block — size, yields, valuation z-scores. */
   def valueEntry: Q = familyEntry(valueDataset, Value.columns)
 
-  /** Floor-based 6-dp rounding: floor(x*1e6 + 0.5)/1e6 — every step
-    * is a single correctly-rounded IEEE op, so Spark and DuckDB
-    * produce bit-identical results from identical inputs. Engine
-    * round(x, 6) differs on exact decimal halves (Spark rounds the
-    * shortest decimal repr via BigDecimal; DuckDB scales by 1e6
-    * first), and rank-ratio alphas DO land on exact halves. */
-  private def rf6(name: String) =
-    (floor(col(name) * 1e6 + lit(0.5)) / 1e6).as(name)
-
   /** q90: the ENTIRE Alpha101 corpus as ONE entry — one DAG on the
     * Spark side, one CTE chain on the DuckDB side. The round-4 gate
     * timed out because 7 batch entries + q58 each rebuilt the whole
@@ -106,7 +99,7 @@ object FactorQueries {
     * derivation q58/q91 consume, computed once per session. */
   def alphaAll: Q = (s, dir) =>
     alphaFull(s, dir).select(
-      Seq(col("stock"), col("day")) ++ Alpha101.columns.map(rf6): _*)
+      Seq(col("stock"), col("day")) ++ Alpha101.columns.map(r6): _*)
       .orderBy("stock", "day")
 
   /** q48: the flagship "History Mirror" similarity search
@@ -165,7 +158,6 @@ object FactorQueries {
   private final case class IvfParts(f: DataFrame, searched: DataFrame,
                                     assigned: DataFrame, q: DataFrame)
   private def ivfParts(s: SparkSession, dir: String): IvfParts = {
-    val fr6 = (c: Column) => floor(c * 1e6 + lit(0.5)) / 1e6
     // the narrow factor frame feeds FOUR branches (centroids, query,
     // pruned scan, exact ground truth); materialize it once instead
     // of re-deriving the technical pipeline per branch. ~35 bytes/row
@@ -350,93 +342,114 @@ object FactorQueries {
       .orderBy("stock", "day")
   }
 
-  /** q167: STREAMING factor-mart maintenance — q129's nightly
-    * incremental factor job rewired onto q156's foreachBatch pattern
-    * (r16 verdict stretch #8): the factor plane's trailing days
-    * arrive as micro-batches of bars (three 5-day replay files,
-    * oldest-first), and each batch, inside ONE foreachBatch
-    * transaction, (1) reads the 25-day tail it needs from the
+  /** q167–q174: STREAMING factor-mart maintenance — q129's nightly
+    * incremental factor job rewired onto q156's foreachBatch pattern,
+    * one harness for every family of [[streamFamilies]]. The factor
+    * plane's trailing days arrive as micro-batches of bars (three
+    * 5-day replay files, oldest-first), and each batch, inside ONE
+    * foreachBatch transaction, (1) reads the tail it needs from the
     * day-partitioned BARS store — which already includes every
-    * previous batch's append, (2) computes the batch days' factor
-    * rows with the same tail-restricted Technical DAG q129 runs
-    * (exact by frame containment: rsi_14/cci_14 look back 13 rows +
-    * one lag, bias_20 19 rows; the tail supplies 24 prior days), and
+    * previous batch's append, (2) computes the batch days' factor rows
+    * with the family's kernel over tail ∪ batch (seeded from a stored
+    * state snapshot where the family's lookback is unbounded), and
     * (3) appends the new day partitions to BOTH stores with dynamic
     * partition overwrite — a foreachBatch retry replaces its own
     * partitions, never duplicates them (q156's idempotence recipe,
-    * achieved here by layout instead of by probe). The entry returns
+    * achieved here by layout instead of by probe). An entry returns
     * the WHOLE mart after the stream drains: historical + streamed
-    * days, value-identical to a scratch full-panel derive (pinned in
-    * StreamMartSpec) — and the oracle replays the EXACT per-batch
-    * restricted computation, so the gate never leans on the
-    * containment argument (q129's convention).
+    * days, value-identical to a scratch full-panel derive (pinned per
+    * family in StreamMartSpec) — and each oracle replays either the
+    * exact per-batch restricted computation (q167) or the full
+    * history, so the gate never leans on the containment argument.
     *
     * At 100 TB: a day's bars cost one window-depth partition-pruned
-    * tail read + one day-partition write; the mart stays readable
-    * mid-maintenance (readers list committed partitions), history is
-    * never rewritten (q151's generation-append for the factor
-    * plane), and the 5-day catch-up window absorbs restatements.
+    * tail read + one day-partition write per store; the mart stays
+    * readable mid-maintenance (readers list committed partitions),
+    * history is never rewritten (q151's generation-append for the
+    * factor plane), and the 5-day catch-up window absorbs
+    * restatements.
     *
-    * SINGLE LIVE RUN (all seven streamed entries alike): an
-    * invocation deletes the PREVIOUS run's store before building its
-    * own — at most one run root per family stays on disk — so consume
+    * SINGLE LIVE RUN (every streamed entry alike): an invocation
+    * deletes the PREVIOUS run's store before building its own — at
+    * most one run root per family stays on disk — so consume
     * (collect/write) a returned frame before invoking the same entry
     * again; an unconsumed earlier frame would dangle on deleted files
     * (r19 ADVICE 1). Verify and perfbench both consume eagerly. */
-  def streamMartAppend: Q = (s, dir) => {
-    val run = streamEntryFromSeed(s, dir, "technical")
-    s.read.parquet(s"$run/mart")
-      .select(col("stock"), col("day").cast("long").as("day"),
-        round(col("rsi_14"), 6).as("rsi_14"),
-        round(col("bias_20"), 6).as("bias_20"),
-        round(col("cci_14"), 6).as("cci_14"))
-      .orderBy("stock", "day")
-  }
+  private def streamEntry(name: String, maintained: Boolean = false): Q =
+    (s, dir) => {
+      val fam = streamFamily(name)
+      val run =
+        if (!maintained) runFromSeed(s, dir, fam)
+        else runFromSeed(s, dir, fam.wrapBatch(maintainedOnBatch(s, _, _)),
+          // q174 rides the family's seed under its own run key and
+          // plants its fragmented partition on the run copy only
+          runKey = Some(s"${name}_ret"),
+          afterCopy = root => fragmentOldestDay(s, s"$root/mart"))
+      streamMart(s, run, fam.cols, fam.out)
+    }
 
-  /** The q167 pipeline with the scratch root exposed (spec hook —
-    * StreamMartSpec snapshots the historical mart files between the
-    * batch build and the stream to prove the append never rewrites
-    * them). `afterHistorical` runs after the historical mart lands,
-    * before the stream starts. */
-  private[analytics] def streamMartAppendRun(s: SparkSession, dir: String,
-      root: String, afterHistorical: () => Unit = () => ()): DataFrame = {
-    val start = streamMartHarness(s, dir, root, afterHistorical)
-    start(None)
+  /** The one streamed mart read: (stock, day) plus `cols`, each
+    * through `out`, ordered. The entries project with their family's
+    * `out`; the specs read raw values with `col`. */
+  private[analytics] def streamMart(s: SparkSession, root: String,
+      cols: Seq[String], out: String => Column): DataFrame =
     s.read.parquet(s"$root/mart")
-      .select(col("stock"), col("day").cast("long").as("day"),
-        round(col("rsi_14"), 6).as("rsi_14"),
-        round(col("bias_20"), 6).as("bias_20"),
-        round(col("cci_14"), 6).as("cci_14"))
+      .select(Seq(col("stock"), col("day").cast("long").as("day")) ++
+        cols.map(out): _*)
       .orderBy("stock", "day")
+
+  /** A micro-batch body: (batch, d1, dEnd), the batch's first and last
+    * day as [[streamStart]] aggregated them. */
+  private[analytics] type BatchFn = (DataFrame, Long, Long) => Unit
+
+  /** What a family's historical build and batch body may read besides
+    * the store root: the session, the stream input schema (read on
+    * demand — only q171's template keys on it) and, on the seed path
+    * only, the source dir (q171 seeds its historical mart from that
+    * dir's session alpha mart; an injected panel has none). */
+  private[analytics] final case class StreamEnv(s: SparkSession,
+      schema: () => org.apache.spark.sql.types.StructType,
+      dir: Option[String])
+
+  /** One streamed family: its name (the seed key), the mart's data
+    * columns, the entry's per-column output projection, the historical
+    * build over `$root/bars` at the cut (the mart, plus the state
+    * snapshot where the family keeps one), and the per-batch
+    * maintenance. */
+  private[analytics] final case class StreamFamily(name: String,
+      cols: Seq[String], out: String => Column,
+      historical: StreamEnv => (String, Long) => Unit,
+      onBatch: StreamEnv => String => BatchFn) {
+    /** The same family with every batch body wrapped by `w` (given the
+      * store root): q174's in-stream maintenance, the read-race probe's
+      * pause. */
+    def wrapBatch(w: (String, BatchFn) => BatchFn): StreamFamily =
+      copy(onBatch = e => root => w(root, onBatch(e)(root)))
   }
 
-  /** Shared scaffolding for the three streaming factor-mart
-    * maintenance harnesses (q167 technical / q168 EMA / q169 alpha
-    * slice — one copy after the r18 review flagged the triplication):
-    * the day-partitioned bars store over `day <= cut`, the
-    * historical-build hook, three 5-day replay files (sequential
-    * writes → increasing mod times → replayed oldest-first, one
-    * micro-batch each — the q95+ convention; batch order is what
-    * makes the oracles deterministic), and the start function. Each
-    * invocation of the returned function runs one
-    * `Trigger.AvailableNow` pass against the SAME checkpoint, so the
-    * restart-recovery pins can kill a run mid-stream and resume it
-    * (q156's harness shape). `failAfterWritesOf` injects a crash
-    * AFTER that batch's store writes land but BEFORE its checkpoint
-    * commit — the widest at-least-once retry window. An EMPTY
-    * micro-batch (no stock traded in the replay window) maintains
-    * nothing and just commits. Retry/idempotence mechanics (the
+  /** The one streamed-family harness over an explicit panel and root:
+    * the scaffold stores over `day <= cut` ([[seedStores]]), the
+    * family's historical build, the `afterHistorical` hook (specs
+    * snapshot the historical files there; the read-race probe drops
+    * its ready marker), and the start function. Each invocation of the
+    * returned function runs one `Trigger.AvailableNow` pass against
+    * the SAME checkpoint, so the restart-recovery pins can kill a run
+    * mid-stream and resume it (q156's harness shape);
+    * `failAfterWritesOf` injects a crash AFTER that batch's store
+    * writes land but BEFORE its checkpoint commit — the widest
+    * at-least-once retry window. Retry/idempotence mechanics (the
     * `day < d1` guards, dynamic partition overwrite) live in each
-    * operator's `onBatch` — they are operator semantics, not
-    * scaffolding. */
-  private def streamScaffold(s: SparkSession, panel: DataFrame, root: String,
-      afterHistorical: () => Unit,
-      buildHistorical: Long => Unit,
-      onBatch: (DataFrame, Long) => Unit): Option[Long] => Unit = {
+    * family's batch body — they are operator semantics, not
+    * scaffolding. The entries run the same family rows from memoized
+    * seeds instead ([[runFromSeed]]). */
+  private[analytics] def streamHarness(s: SparkSession, fam: StreamFamily,
+      panel: DataFrame, root: String, afterHistorical: () => Unit = () => ())
+      : Option[Long] => Unit = {
+    val env = StreamEnv(s, () => panel.schema, dir = None)
     val cut = seedStores(s, panel, root)
-    buildHistorical(cut)
+    fam.historical(env)(root, cut)
     afterHistorical()
-    streamStart(s, root, s"$root/in", onBatch)
+    streamStart(s, root, s"$root/in", fam.onBatch(env)(root))
   }
 
   /** The IMMUTABLE scaffold stores for a panel under `root`: the
@@ -487,20 +500,19 @@ object FactorQueries {
     props.getProperty("cut").toLong
   }
 
-  /** Per-batch context handed from [[streamStart]] to the operator
-    * `onBatch` on the SAME thread (r20 optimization): the batch-end
-    * day the stream already aggregated and the first-bar prior
-    * snapshot it already resolved for the registry extension — the
-    * operators used to re-run one small Spark job for each
-    * (`batch.agg(max)` / the snapshot-day aggregate inside
-    * [[adaptiveDayTailWithHorizon]]), and at ~0.2-0.3 s per driver-
-    * blocking job × 3 batches × 8 streamed entries the re-reads were
-    * pure overhead. Strictly an optimization seam: every reader
-    * falls back to its original direct read when the context is
-    * unset (the specs drive the onBatch bodies and the tail helper
-    * without the stream), and the context frame is re-executed
-    * lazily, so its values are exactly the store reads it replaces. */
-  private final case class BatchCtx(root: String, d1: Long, dEnd: Long,
+  /** Per-batch context handed from [[streamStart]] to the batch body
+    * on the SAME thread (r20 optimization): the first-bar prior
+    * snapshot the stream already resolved for the registry extension,
+    * and the in-run snapshot-day carry — the operators used to re-run
+    * the snapshot-day aggregate inside [[adaptiveDayTailWithHorizon]]
+    * / [[seedSnapshot]], and at ~0.2-0.3 s per driver-blocking job ×
+    * 3 batches × 8 streamed entries the re-reads were pure overhead.
+    * Strictly an optimization seam: every reader falls back to its
+    * original guarded read when the context is unset (the specs drive
+    * the tail helper without the stream) or belongs to another
+    * (root, d1), and the context frame is re-executed lazily, so its
+    * values are exactly the store reads it replaces. */
+  private final case class BatchCtx(root: String, d1: Long,
       priorFb: DataFrame, carry: java.util.HashMap[String, java.lang.Long]) {
     /** r20 ADVICE: the context is only valid for the exact (root, d1)
       * the stream resolved it for — a consumer passing a different
@@ -536,7 +548,7 @@ object FactorQueries {
     * `Trigger.AvailableNow` pass per invocation of the returned
     * function against the SAME checkpoint (q156's restart shape). */
   private def streamStart(s: SparkSession, root: String, inDir: String,
-      onBatch: (DataFrame, Long) => Unit): Option[Long] => Unit = {
+      onBatch: BatchFn): Option[Long] => Unit = {
     val schema = s.read.parquet(s"$inDir/b0").schema
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$inDir/*")
@@ -595,8 +607,8 @@ object FactorQueries {
                 .write.partitionBy("day").mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .parquet(fbPath)) {
-              batchCtx.set(Some(BatchCtx(root, d1, dEnd, priorFb, carry)))
-              try onBatch(batch, d1)
+              batchCtx.set(Some(BatchCtx(root, d1, priorFb, carry)))
+              try onBatch(batch, d1, dEnd)
               finally batchCtx.remove()
             }
             carry.put(fbPath, dEnd)
@@ -621,7 +633,7 @@ object FactorQueries {
     }
   }
 
-  /** Day-partition write shared by the three harnesses' stores. */
+  /** Day-partition write shared by every streamed family's stores. */
   private def writeDayPartitions(df: DataFrame, path: String): Unit =
     df.repartition(col("day"))
       .write.partitionBy("day").mode("overwrite")
@@ -675,7 +687,7 @@ object FactorQueries {
   // checkpoint. The entry walls are then the repeat-run cost: copy +
   // 3-batch maintenance + mart read. The replay files are read
   // straight from the BASE seed (read-only for the stream); specs
-  // keep driving [[streamScaffold]] directly with explicit roots —
+  // keep driving [[streamHarness]] directly with explicit roots —
   // seeding is an entry concern.
   private def streamSeed(s: SparkSession, dir: String, name: String)(
       build: String => Unit): String =
@@ -760,23 +772,22 @@ object FactorQueries {
     * against a fresh checkpoint, return the run root for the mart
     * read. The memoized seed makes a repeat run cost copy +
     * maintenance only. At most ONE run root per (session, dir,
-    * family) stays on disk: a new run forgets its predecessor's
+    * run key) stays on disk: a new run forgets its predecessor's
     * resident entry first, which deletes that root — /dev/shm must not
     * accumulate a full store copy per invocation (r19 review finding).
-    * Contract: a returned frame is consumed before the same entry runs
-    * again (Verify and perfbench both do). */
-  private def runFromSeed(s: SparkSession, dir: String, family: String,
-      buildHistorical: (String, Long) => Unit,
-      onBatch: String => (DataFrame, Long) => Unit,
-      runKey: Option[String] = None,
+    * `runKey` (default: the family name) separates entries SHARING a
+    * family seed (q174 rides the technical seed) so one entry's rerun
+    * never deletes the other's still-live run root; `afterCopy`
+    * mutates the RUN copy before the stream starts (the immutable
+    * seed stays pristine). Contract: a returned frame is consumed
+    * before the same entry runs again (Verify and perfbench both do). */
+  private[analytics] def runFromSeed(s: SparkSession, dir: String,
+      fam: StreamFamily, runKey: Option[String] = None,
       afterCopy: String => Unit = _ => ()): String = {
-    val seed = familyStreamSeed(s, dir, family, buildHistorical)
-    // `runKey` separates entries SHARING a family seed (q174 rides
-    // the technical seed) so one entry's rerun never deletes the
-    // other's still-live run root; `afterCopy` mutates the RUN copy
-    // before the stream starts (q174 plants its fragmented partition
-    // there — the immutable seed stays pristine)
-    val key = runKey.getOrElse(family)
+    val env = StreamEnv(s, () => baseInSchema(s, dir), Some(dir))
+    val onBatch = fam.onBatch(env)
+    val seed = familyStreamSeed(s, dir, fam.name, fam.historical(env))
+    val key = runKey.getOrElse(fam.name)
     graft.Residents.forget(s, ("stream-run", dir, key))
     graft.Residents.root(s, ("stream-run", dir, key), s"graft_srun_$key") { run =>
       copyTree(seed, run)
@@ -785,58 +796,42 @@ object FactorQueries {
     }
   }
 
-  /** q167 harness on [[streamScaffold]]: per non-empty batch, one
-    * 25-day tail read strictly below the batch (`day < d1` is the
-    * at-least-once retry guard: a re-executed batch finds its own
-    * previous append already in the bars store — without it the
-    * union would duplicate every batch row and the row-frame windows
-    * would compute corrupted factors that dynamic overwrite then
-    * writes over the mart), the tail-restricted Technical DAG, and
-    * two dynamic-overwrite day-partition writes. The filter rides
-    * the partition column BEFORE the cast so pruning reaches the
-    * file listing (q129's pattern). */
-  private[analytics] def streamMartHarness(s: SparkSession, dir: String,
-      root: String, afterHistorical: () => Unit = () => ())
-      : Option[Long] => Unit =
-    streamMartHarnessPanel(s, Quotes.panel(s, dir), root, afterHistorical)
+  /** The stream input schema for (session, dir): the base seed's
+    * first replay file — what the micro-batches will carry. */
+  private def baseInSchema(s: SparkSession,
+      dir: String): org.apache.spark.sql.types.StructType =
+    s.read.parquet(s"${baseStreamSeed(s, dir)}/in/b0").schema
 
-  /** Panel-injectable q167 harness (spec hook for the suspension
-    * case). */
-  private[analytics] def streamMartHarnessPanel(s: SparkSession,
-      panel: DataFrame, root: String,
-      afterHistorical: () => Unit = () => ())
-      : Option[Long] => Unit =
-    streamScaffold(s, panel, root, afterHistorical,
-      buildHistorical = technicalHistorical(s)(root, _),
-      onBatch = technicalOnBatch(s)(root))
+  /** The streamed families, one row each; the registry's q167–q174
+    * entries, the seeds, the harness, both cross-process probes and
+    * StreamMartSpec all read them from here. Bounded-lookback families
+    * are kernel rows ([[kernelFamily]]); EMA, sentiment and the full
+    * alpha mart keep their own bodies. Lazy: object init must not
+    * capture a val declared below it. */
+  private[analytics] lazy val streamFamilies: Seq[StreamFamily] = Seq(
+    // q167: rsi/bias/cci through the tail-restricted Technical DAG
+    // (q129's); 20-row floor = bias_20's MA, the deepest of the three.
+    // Engine round(…, 6), not fr6: the q167/q174 oracle replays q129's
+    // chain, which rounds with round()
+    kernelFamily("technical", Technical.compute,
+      Seq("rsi_14", "bias_20", "cci_14"), minRows = 20,
+      out = c => round(col(c), 6).as(c)),
+    StreamFamily("ema", EmaFamily.columns, r6,
+      e => emaHistorical(e.s), e => emaOnBatch(e.s)),
+    // q169: 9-row floor = alpha_053's lag 9
+    kernelFamily("alpha_slice", Alpha101.computeStreamSlice,
+      streamAlphaSlice, minRows = 9),
+    StreamFamily("sentiment", sentimentCols, col,
+      e => sentimentHistorical(e.s), e => sentimentOnBatch(e.s)),
+    StreamFamily("alpha_full", Alpha101.columns, r6,
+      alphaFullHistorical, alphaFullOnBatch),
+    // q172/q173: 64-row floor = roc_60's lag / the 60-row z-scores
+    kernelFamily("momentum", Momentum.compute, Momentum.columns, minRows = 64),
+    kernelFamily("value", Value.compute, Value.columns, minRows = 64))
 
-  private def technicalHistorical(s: SparkSession)(root: String,
-      cut: Long): Unit =
-    Technical.compute(
-        s.read.parquet(s"$root/bars").withColumn("day", col("day").cast("long")))
-      .select(col("stock"), col("day"), col("rsi_14"), col("bias_20"),
-        col("cci_14"))
-      .repartition(col("day"))
-      .write.partitionBy("day").mode("overwrite").parquet(s"$root/mart")
-
-  private def technicalOnBatch(s: SparkSession)(root: String)
-      : (DataFrame, Long) => Unit = (batch, d1) => {
-    // adaptive tail with a 20-row floor (bias_20's MA is the deepest
-    // of the three mart columns at 19 prior rows): on a dense panel
-    // this resolves to the original 25-day read (the oracle's replay
-    // window), and a stock resuming from a suspension longer than the
-    // base horizon widens instead of silently truncating its frames —
-    // the same failure class the r18 ADVICE closed for q168 (r19
-    // review finding; the gapped-panel spec case pins it)
-    val tail = adaptiveDayTail(s, root, batch, d1, minRows = 20)
-    val f = Technical.compute(tail.unionByName(batch))
-      .filter(col("day") >= d1)
-      .select(col("stock"), col("day"), col("rsi_14"), col("bias_20"),
-        col("cci_14"))
-    withSideWrite(() => writeDayPartitions(batch, s"$root/bars")) {
-      writeDayPartitions(f, s"$root/mart")
-    }
-  }
+  private[analytics] def streamFamily(name: String): StreamFamily =
+    streamFamilies.find(_.name == name).getOrElse(
+      throw new IllegalArgumentException(s"unknown streamed family $name"))
 
   /** Cross-process reader-probe hook (r19 verdict ask #6,
     * `tools/stream_read_race.sh`): the q167 harness against an
@@ -848,16 +843,15 @@ object FactorQueries {
     * that is what [[graft.tools.StreamReadProbe]] exercises. */
   private[graft] def streamMartProbeRun(s: SparkSession, dir: String,
       root: String, batchPauseMs: Long): Unit = {
-    val inner = technicalOnBatch(s)(root)
-    streamScaffold(s, Quotes.panel(s, dir), root,
+    val paused = streamFamily("technical").wrapBatch((_, inner) =>
+      (b, d1, dEnd) => {
+        inner(b, d1, dEnd)
+        if (batchPauseMs > 0) Thread.sleep(batchPauseMs)
+      })
+    streamHarness(s, paused, Quotes.panel(s, dir), root,
       afterHistorical = () => {
         val (fs, p) = fsPath(s"$root/_PROBE_READY")
         fs.create(p, true).close()
-      },
-      buildHistorical = technicalHistorical(s)(root, _),
-      onBatch = (b, d1) => {
-        inner(b, d1)
-        if (batchPauseMs > 0) Thread.sleep(batchPauseMs)
       })(None)
   }
 
@@ -886,8 +880,8 @@ object FactorQueries {
     * them. The manifest's code-change axis, mirroring martValid's
     * `cols` check: a column added/removed/renamed in the streamed
     * pipeline invalidates the store with no version bump needed. */
-  private val streamTechnicalCols =
-    Seq("stock", "rsi_14", "bias_20", "cci_14", "day")
+  private def streamTechnicalCols =
+    ("stock" +: streamFamily("technical").cols) :+ "day"
 
   /** The streamed store's identity axes — what its manifest must
     * match for reuse. `kind` plays the mart gate's `dataset` role;
@@ -943,12 +937,14 @@ object FactorQueries {
   private[graft] def streamPersistProbeRun(s: SparkSession, root: String,
       dir: String): String = {
     val p = streamStorePathFor(root, dir)
+    val technical = streamFamily("technical")
+    val env = StreamEnv(s, () => s.read.parquet(s"$p/in/b0").schema, None)
     val pre = streamStoreValid(s, p, dir)
     if (!pre) {
       val (fs, pp) = fsPath(p)
       if (fs.exists(pp)) fs.delete(pp, true)
       val cut = seedStores(s, Quotes.panel(s, dir), p)
-      technicalHistorical(s)(p, cut)
+      technical.historical(env)(p, cut)
       writeStreamManifest(s, p, dir)
     } else {
       val cut = seedCut(p)
@@ -962,7 +958,7 @@ object FactorQueries {
       require(dayPartitionFiles(s"$p/firstbar").size <= 2,
         "snapshot retirement failed")
     }
-    streamStart(s, p, s"$p/in", technicalOnBatch(s)(p))(None)
+    streamStart(s, p, s"$p/in", technical.onBatch(env)(p))(None)
     val mart = s.read.parquet(s"$p/mart")
     // bit_xor of a row hash, the MartRaceProbe convention: ANSI mode
     // throws on long-sum overflow, and rows are unique by (stock,
@@ -1020,46 +1016,9 @@ object FactorQueries {
     * depth. The scratch alternative replays every bar ever ingested
     * to rebuild the unbounded registers; this is the difference
     * between a nightly job bounded by the day's data and one bounded
-    * by the archive. Single-live-run contract as [[streamMartAppend]]:
-    * consume a returned frame before rerunning the entry. */
-  def streamEmaMartAppend: Q = (s, dir) => {
-    val run = streamEntryFromSeed(s, dir, "ema")
-    s.read.parquet(s"$run/mart")
-      .select(Seq(col("stock"), col("day").cast("long").as("day")) ++
-        EmaFamily.columns.map(r6): _*)
-      .orderBy("stock", "day")
-  }
-
-  /** The q168 pipeline with the scratch root exposed (spec hook —
-    * same shape as [[streamMartAppendRun]]). */
-  private[analytics] def streamEmaMartAppendRun(s: SparkSession, dir: String,
-      root: String, afterHistorical: () => Unit = () => ()): DataFrame = {
-    val start = streamEmaMartHarness(s, dir, root, afterHistorical)
-    start(None)
-    s.read.parquet(s"$root/mart")
-      .select(Seq(col("stock"), col("day").cast("long").as("day")) ++
-        EmaFamily.columns.map(r6): _*)
-      .orderBy("stock", "day")
-  }
-
-  private[analytics] def streamEmaMartHarness(s: SparkSession, dir: String,
-      root: String, afterHistorical: () => Unit = () => ())
-      : Option[Long] => Unit =
-    streamEmaMartHarnessPanel(s, Quotes.panel(s, dir), root, afterHistorical)
-
-  /** Panel-injectable q168 harness (spec hook): StreamMartSpec feeds
-    * a panel with a mid-stream PER-STOCK trading gap to pin the two
-    * suspension axes — the batch-end snapshot must stay TOTAL over
-    * known stocks, and the window-input tail must be row-depth, not
-    * day-depth. */
-  private[analytics] def streamEmaMartHarnessPanel(s: SparkSession,
-      panel: DataFrame, root: String,
-      afterHistorical: () => Unit = () => ())
-      : Option[Long] => Unit =
-    streamScaffold(s, panel, root, afterHistorical,
-      buildHistorical = emaHistorical(s)(root, _),
-      onBatch = emaOnBatch(s)(root))
-
+    * by the archive. StreamMartSpec's gapped panel pins the two
+    * suspension axes: the batch-end snapshot stays TOTAL over known
+    * stocks, and the window-input tail is row-depth, not day-depth. */
   private def emaStateCols = Seq(col("stock")) ++ EmaFamily.stateColumns.map(col)
   private def emaFactorCols =
     Seq(col("stock"), col("day")) ++ EmaFamily.columns.map(col)
@@ -1093,9 +1052,7 @@ object FactorQueries {
   }
 
   private def emaOnBatch(s: SparkSession)(root: String)
-      : (DataFrame, Long) => Unit = (batch, d1) => {
-    val dEnd = batchCtx.get().filter(_.matches(root, d1)).map(_.dEnd)
-      .getOrElse(batch.agg(max("day")).head().getLong(0))
+      : BatchFn = (batch, d1, dEnd) => {
     // window-input tail: the kernel's lookbacks are ROW frames
     // (kdj-rsv = 9 rows, force-fin lag = 1 row), so under a
     // per-stock trading gap "8 days" ≠ "8 rows" — the adaptive
@@ -1175,64 +1132,6 @@ object FactorQueries {
     "alpha_004", "alpha_012", "alpha_020", "alpha_033", "alpha_042",
     "alpha_053", "alpha_101")
 
-  /** Single-live-run contract as [[streamMartAppend]]: consume a
-    * returned frame before rerunning the entry. */
-  def streamAlphaMartAppend: Q = (s, dir) => {
-    val run = streamEntryFromSeed(s, dir, "alpha_slice")
-    s.read.parquet(s"$run/mart")
-      .select(Seq(col("stock"), col("day").cast("long").as("day")) ++
-        streamAlphaSlice.map(r6): _*)
-      .orderBy("stock", "day")
-  }
-
-  /** The q169 pipeline with the scratch root exposed (spec hook). */
-  private[analytics] def streamAlphaMartAppendRun(s: SparkSession, dir: String,
-      root: String, afterHistorical: () => Unit = () => ()): DataFrame = {
-    val start = streamAlphaMartHarness(s, dir, root, afterHistorical)
-    start(None)
-    s.read.parquet(s"$root/mart")
-      .select(Seq(col("stock"), col("day").cast("long").as("day")) ++
-        streamAlphaSlice.map(r6): _*)
-      .orderBy("stock", "day")
-  }
-
-  private[analytics] def streamAlphaMartHarness(s: SparkSession, dir: String,
-      root: String, afterHistorical: () => Unit = () => ())
-      : Option[Long] => Unit =
-    streamAlphaMartHarnessPanel(s, Quotes.panel(s, dir), root, afterHistorical)
-
-  /** Panel-injectable q169 harness (spec hook for the suspension
-    * case). */
-  private[analytics] def streamAlphaMartHarnessPanel(s: SparkSession,
-      panel: DataFrame, root: String,
-      afterHistorical: () => Unit = () => ())
-      : Option[Long] => Unit =
-    streamScaffold(s, panel, root, afterHistorical,
-      buildHistorical = alphaSliceHistorical(s)(root, _),
-      onBatch = alphaSliceOnBatch(s)(root))
-
-  private def alphaSliceCols =
-    Seq(col("stock"), col("day")) ++ streamAlphaSlice.map(col)
-
-  private def alphaSliceHistorical(s: SparkSession)(root: String,
-      cut: Long): Unit =
-    Alpha101.computeStreamSlice(
-        s.read.parquet(s"$root/bars").withColumn("day", col("day").cast("long")))
-      .select(alphaSliceCols: _*)
-      .repartition(col("day"))
-      .write.partitionBy("day").mode("overwrite").parquet(s"$root/mart")
-
-  private def alphaSliceOnBatch(s: SparkSession)(root: String)
-      : (DataFrame, Long) => Unit = (batch, d1) => {
-    val tail = adaptiveDayTail(s, root, batch, d1, minRows = 9)
-    val f = Alpha101.computeStreamSlice(tail.unionByName(batch))
-      .filter(col("day") >= d1)
-      .select(alphaSliceCols: _*)
-    withSideWrite(() => writeDayPartitions(batch, s"$root/bars")) {
-      writeDayPartitions(f, s"$root/mart")
-    }
-  }
-
   /** FULL-DAY bar tail strictly below the batch with an ADAPTIVELY
     * widening day horizon (25 → 100 → 400 → whole store): widen
     * until every batch stock EITHER has at least `minRows` prior rows
@@ -1246,7 +1145,7 @@ object FactorQueries {
     * panel listing fresh stocks every batch would otherwise degrade
     * every tail to a whole-store scan chasing rows that do not
     * exist. The first-bar registry is scaffold-maintained
-    * ([[streamScaffold]]) and broadcast — entity-sized. A missing /
+    * ([[streamStart]]) and broadcast — entity-sized. A missing /
     * over-retired registry degrades to the conservative pre-registry
     * behavior (widen on short counts alone): correctness never
     * depends on it, only the read bound does. Full days keep
@@ -1408,50 +1307,11 @@ object FactorQueries {
     *
     * At 100 TB: one 1-row-per-stock pruned tail read, one
     * entity-sized pointer-state read (broadcast), one day-partition
-    * write per store per day. Single-live-run contract as
-    * [[streamMartAppend]]: consume a returned frame before rerunning
-    * the entry. */
-  def streamSentimentMartAppend: Q = (s, dir) => {
-    val run = streamEntryFromSeed(s, dir, "sentiment")
-    s.read.parquet(s"$run/mart")
-      .select(col("stock"), col("day").cast("long").as("day"),
-        col("is_limit_up"), col("is_limit_broken"),
-        col("limit_up_streak"), col("money_flow_main"))
-      .orderBy("stock", "day")
-  }
-
-  /** The q170 pipeline with the scratch root exposed (spec hook). */
-  private[analytics] def streamSentimentMartAppendRun(s: SparkSession,
-      dir: String, root: String,
-      afterHistorical: () => Unit = () => ()): DataFrame = {
-    val start = streamSentimentMartHarness(s, dir, root, afterHistorical)
-    start(None)
-    s.read.parquet(s"$root/mart")
-      .select(col("stock"), col("day").cast("long").as("day"),
-        col("is_limit_up"), col("is_limit_broken"),
-        col("limit_up_streak"), col("money_flow_main"))
-      .orderBy("stock", "day")
-  }
-
-  private[analytics] def streamSentimentMartHarness(s: SparkSession,
-      dir: String, root: String, afterHistorical: () => Unit = () => ())
-      : Option[Long] => Unit =
-    streamSentimentMartHarnessPanel(s, Quotes.panel(s, dir), root,
-      afterHistorical)
-
-  /** Panel-injectable q170 harness (spec hook for the suspension
-    * case). */
-  private[analytics] def streamSentimentMartHarnessPanel(s: SparkSession,
-      panel: DataFrame, root: String,
-      afterHistorical: () => Unit = () => ())
-      : Option[Long] => Unit =
-    streamScaffold(s, panel, root, afterHistorical,
-      buildHistorical = sentimentHistorical(s)(root, _),
-      onBatch = sentimentOnBatch(s)(root))
-
-  private def sentimentMartCols = Seq(col("stock"), col("day"),
-    col("is_limit_up"), col("is_limit_broken"), col("limit_up_streak"),
-    col("money_flow_main"))
+    * write per store per day. */
+  private def sentimentCols = Seq("is_limit_up", "is_limit_broken",
+    "limit_up_streak", "money_flow_main")
+  private def sentimentMartCols =
+    Seq(col("stock"), col("day")) ++ sentimentCols.map(col)
 
   private def sentimentHistorical(s: SparkSession)(root: String,
       cut: Long): Unit = {
@@ -1476,9 +1336,7 @@ object FactorQueries {
   }
 
   private def sentimentOnBatch(s: SparkSession)(root: String)
-      : (DataFrame, Long) => Unit = (batch, d1) => {
-    val dEnd = batchCtx.get().filter(_.matches(root, d1)).map(_.dEnd)
-      .getOrElse(batch.agg(max("day")).head().getLong(0))
+      : BatchFn = (batch, d1, dEnd) => {
     // the limit flags need ONLY the lag-1 close (row-based), so
     // keep just the LAST ROW per stock of the adaptive read —
     // without the truncation every batch would run flags over
@@ -1514,30 +1372,34 @@ object FactorQueries {
     } finally { merged.unpersist(); () }
   }
 
-  /** q172/q173: STREAMING maintenance of the MOMENTUM and VALUE
-    * marts — the last two family rows of the matrix (r18 verdict ask
-    * #2). SURVEY D80 claimed both are "exactly q167's shape with no
-    * new mechanism — documented, not duplicated"; these entries prove
-    * it with full-replay oracles (q44's / q45's) instead of leaving
-    * the claim on paper. Both kernels are pure bounded-lookback
-    * per-stock DAGs — no cross-sectional stage, no recursion, no
-    * pointer state — so ONE generic harness serves them: per batch,
-    * an adaptive tail sized to the family's compound row depth
-    * (momentum: roc_60's lag 60; value: the 60-row valuation
-    * z-scores), the family kernel over tail ∪ batch, keep day ≥ d1,
-    * dynamic-overwrite day-partition writes (q167's recipe verbatim
-    * — the `day < d1` tail bound is the at-least-once retry guard,
-    * pinned once in the q167/q169 crash cases). The hidden-mechanism
-    * risks the ask names — momentum's 60-day windows vs the old
-    * 25-day tail, value's fundamentals — are exactly what the
-    * full-history oracles would catch: the tail's 64-row floor
-    * covers the 60-row windows with slack, and the fundamentals
+  /** The bounded-lookback families — technical (q167), the alpha
+    * slice (q169), momentum and value (q172/q173): pure per-stock
+    * window DAGs (plus, for the slice, per-day cross-sectional ranks
+    * over full days) with no recursion and no pointer state, so ONE
+    * kernel row shape serves them: per batch, an adaptive tail sized
+    * to the family's compound row depth (`minRows`), the family kernel
+    * over tail ∪ batch, keep day ≥ d1, dynamic-overwrite day-partition
+    * writes — the `day < d1` tail bound is the at-least-once retry
+    * guard (without it a re-executed batch unions its own previous
+    * bars append and the row-frame windows compute corrupted factors
+    * that dynamic overwrite then serves). The full-history oracles
+    * catch any hidden mechanism: momentum's 60-row windows are covered
+    * by the 64-row floor with slack, and value's fundamentals
     * (pe/pb/ps/dv_ratio/total_mv) ride the panel columns through the
-    * bars store like any price field, no join needed.
+    * bars store like any price field, no join needed. The tail filter
+    * rides the partition column BEFORE the cast so pruning reaches the
+    * file listing (q129's pattern).
     *
-    * At 100 TB: one ≤ 64-row-per-stock pruned tail read + one
-    * day-partition write per store per day — q167's scale claim,
-    * now held by every family. */
+    * At 100 TB: one ≤ `minRows`-per-stock pruned tail read + one
+    * day-partition write per store per day, independent of history
+    * depth. */
+  private def kernelFamily(name: String, kernel: DataFrame => DataFrame,
+      cols: Seq[String], minRows: Int,
+      out: String => Column = r6): StreamFamily =
+    StreamFamily(name, cols, out,
+      e => kernelHistorical(e.s, kernel, cols),
+      e => kernelOnBatch(e.s, kernel, cols, minRows))
+
   private def kernelHistorical(s: SparkSession, kernel: DataFrame => DataFrame,
       cols: Seq[String])(root: String, cut: Long): Unit =
     kernel(s.read.parquet(s"$root/bars")
@@ -1548,7 +1410,7 @@ object FactorQueries {
 
   private def kernelOnBatch(s: SparkSession, kernel: DataFrame => DataFrame,
       cols: Seq[String], minRows: Int)(root: String)
-      : (DataFrame, Long) => Unit = (batch, d1) => {
+      : BatchFn = (batch, d1, _) => {
     val keyed = Seq(col("stock"), col("day")) ++ cols.map(col)
     val tail = adaptiveDayTail(s, root, batch, d1, minRows)
     val f = kernel(tail.unionByName(batch))
@@ -1557,93 +1419,6 @@ object FactorQueries {
     withSideWrite(() => writeDayPartitions(batch, s"$root/bars")) {
       writeDayPartitions(f, s"$root/mart")
     }
-  }
-
-  private def streamFamilyHarnessPanel(s: SparkSession, panel: DataFrame,
-      root: String, kernel: DataFrame => DataFrame, cols: Seq[String],
-      minRows: Int, afterHistorical: () => Unit = () => ())
-      : Option[Long] => Unit =
-    streamScaffold(s, panel, root, afterHistorical,
-      buildHistorical = kernelHistorical(s, kernel, cols)(root, _),
-      onBatch = kernelOnBatch(s, kernel, cols, minRows)(root))
-
-  private[analytics] def streamMomentumHarnessPanel(s: SparkSession,
-      panel: DataFrame, root: String): Option[Long] => Unit =
-    streamFamilyHarnessPanel(s, panel, root, Momentum.compute,
-      Momentum.columns, minRows = 64)
-
-  private[analytics] def streamValueHarnessPanel(s: SparkSession,
-      panel: DataFrame, root: String): Option[Long] => Unit =
-    streamFamilyHarnessPanel(s, panel, root, Value.compute,
-      Value.columns, minRows = 64)
-
-  /** The streamed-family registry: seed-buildable historical +
-    * maintenance per family, shared by the streamed entries. */
-  private def streamFamilies: Seq[(String,
-      (SparkSession, String) => (String, Long) => Unit,
-      (SparkSession, String) => String => (DataFrame, Long) => Unit)] = Seq(
-    ("technical",
-      (s, _) => technicalHistorical(s),
-      (s, _) => technicalOnBatch(s)),
-    ("ema",
-      (s, _) => emaHistorical(s),
-      (s, _) => emaOnBatch(s)),
-    ("alpha_slice",
-      (s, _) => alphaSliceHistorical(s),
-      (s, _) => alphaSliceOnBatch(s)),
-    ("sentiment",
-      (s, _) => sentimentHistorical(s),
-      (s, _) => sentimentOnBatch(s)),
-    ("alpha_full",
-      // historical from the session alpha mart's prefix (see
-      // streamAlphaFullHarness) + the template forced into cache so
-      // the scaffold line absorbs its build, not the first batch
-      (s, dir) => { (root, cut) =>
-        val schema = baseInSchema(s, dir)
-        alphaFullTemplate(s, schema)
-        alphaFullHistorical(s, schema, Some(alphaFull(s, dir)))(root, cut)
-      },
-      (s, dir) => alphaFullOnBatch(s, baseInSchema(s, dir))),
-    ("momentum",
-      (s, _) => kernelHistorical(s, Momentum.compute, Momentum.columns),
-      (s, _) => kernelOnBatch(s, Momentum.compute, Momentum.columns, 64)),
-    ("value",
-      (s, _) => kernelHistorical(s, Value.compute, Value.columns),
-      (s, _) => kernelOnBatch(s, Value.compute, Value.columns, 64)))
-
-  /** The stream input schema for (session, dir): the base seed's
-    * first replay file — what the micro-batches will carry. */
-  private def baseInSchema(s: SparkSession,
-      dir: String): org.apache.spark.sql.types.StructType =
-    s.read.parquet(s"${baseStreamSeed(s, dir)}/in/b0").schema
-
-  /** Run a registered family's maintenance from its memoized seed and
-    * read the mart back (the streamed entries' shared body). */
-  private def streamEntryFromSeed(s: SparkSession, dir: String,
-      family: String): String = {
-    val (_, hist, onBatch) = streamFamilies.find(_._1 == family)
-      .getOrElse(throw new IllegalArgumentException(s"unknown family $family"))
-    runFromSeed(s, dir, family, hist(s, dir), onBatch(s, dir))
-  }
-
-  /** Single-live-run contract as [[streamMartAppend]]: consume a
-    * returned frame before rerunning the entry. */
-  def streamMomentumMartAppend: Q = (s, dir) => {
-    val run = streamEntryFromSeed(s, dir, "momentum")
-    s.read.parquet(s"$run/mart")
-      .select(Seq(col("stock"), col("day").cast("long").as("day")) ++
-        Momentum.columns.map(r6): _*)
-      .orderBy("stock", "day")
-  }
-
-  /** Single-live-run contract as [[streamMartAppend]]: consume a
-    * returned frame before rerunning the entry. */
-  def streamValueMartAppend: Q = (s, dir) => {
-    val run = streamEntryFromSeed(s, dir, "value")
-    s.read.parquet(s"$run/mart")
-      .select(Seq(col("stock"), col("day").cast("long").as("day")) ++
-        Value.columns.map(r6): _*)
-      .orderBy("stock", "day")
   }
 
   /** Compound row-lookback bound of the FULL Alpha101 DAG: the
@@ -1697,57 +1472,52 @@ object FactorQueries {
     * one day-partition write per store per day — cost ∝ compound
     * window depth × entities, independent of history depth. Retry
     * idempotence by layout exactly as q167/q169 (`day < d1` tail
-    * bound + dynamic partition overwrite). Single-live-run contract
-    * as [[streamMartAppend]]: consume a returned frame before
-    * rerunning the entry. */
-  def streamAlphaFullAppend: Q = (s, dir) => {
-    val run = streamEntryFromSeed(s, dir, "alpha_full")
-    s.read.parquet(s"$run/mart")
-      .select(Seq(col("stock"), col("day").cast("long").as("day")) ++
-        Alpha101.columns.map(r6): _*)
-      .orderBy("stock", "day")
+    * bound + dynamic partition overwrite). */
+  private def alphaFullHistorical(e: StreamEnv)(root: String,
+      cut: Long): Unit = {
+    val hist = e.dir match {
+      // seed path: the historical store is a PREFIX RESTRICTION of the
+      // session alpha mart (one build per session, already attributed
+      // to the mart line): every Alpha101 operator is backward-looking
+      // or same-day, so the full-panel derive's rows at day ≤ cut are
+      // bit-identical to a compute over the day ≤ cut prefix alone —
+      // same partition rows in the same order through the same window
+      // accumulation sequence. Rebuilding them through the template
+      // would redo ~35 s of the mart's work per seed. The template is
+      // still forced into the session cache here, so the seed build
+      // absorbs its cost, not the first batch.
+      case Some(dir) =>
+        alphaFullTemplate(e.s, e.schema())
+        alphaFull(e.s, dir).filter(col("day") <= cut)
+          .select(alphaFullOutCols: _*)
+      // an injected panel has no session mart: the prefix goes through
+      // the template (StreamMartSpec pins both shapes)
+      case None =>
+        val schema = e.schema()
+        val bars = e.s.read.parquet(s"$root/bars")
+          .withColumn("day", col("day").cast("long"))
+          .select(schema.fieldNames.map(col).toSeq: _*)
+        org.apache.spark.sql.graftbridge.PlanBridge.swapLeaf(e.s,
+          alphaFullTemplate(e.s, schema), bars)
+    }
+    hist
+      .repartition(col("day"))
+      .write.partitionBy("day").mode("overwrite").parquet(s"$root/mart")
   }
 
-  /** The q171 pipeline with the scratch root exposed (spec hook). */
-  private[analytics] def streamAlphaFullAppendRun(s: SparkSession, dir: String,
-      root: String, afterHistorical: () => Unit = () => ()): DataFrame = {
-    val start = streamAlphaFullHarness(s, dir, root, afterHistorical)
-    start(None)
-    s.read.parquet(s"$root/mart")
-      .select(Seq(col("stock"), col("day").cast("long").as("day")) ++
-        Alpha101.columns.map(r6): _*)
-      .orderBy("stock", "day")
+  private def alphaFullOnBatch(e: StreamEnv): String => BatchFn = {
+    val schema = e.schema()
+    root => (batch, d1, _) => {
+      val tail = adaptiveDayTail(e.s, root, batch, d1,
+        minRows = alphaFullLookbackRows)
+      val f = org.apache.spark.sql.graftbridge.PlanBridge.swapLeaf(e.s,
+          alphaFullTemplate(e.s, schema), tail.unionByName(batch))
+        .filter(col("day") >= d1)
+      withSideWrite(() => writeDayPartitions(batch, s"$root/bars")) {
+        writeDayPartitions(f, s"$root/mart")
+      }
+    }
   }
-
-  private[analytics] def streamAlphaFullHarness(s: SparkSession, dir: String,
-      root: String, afterHistorical: () => Unit = () => ())
-      : Option[Long] => Unit =
-    // the historical store is a PREFIX RESTRICTION of the session
-    // alpha mart (one build per session, already attributed to the
-    // mart line): every Alpha101 operator is backward-looking or
-    // same-day, so the full-panel derive's rows at day ≤ cut are
-    // bit-identical to a compute over the day ≤ cut prefix alone —
-    // same partition rows in the same order through the same window
-    // accumulation sequence. Rebuilding them through the template
-    // would redo ~35 s of the mart's work per entry run (r18 ask #6's
-    // share-the-scaffold direction); the spec's panel-injected path
-    // keeps the template-built historical, exercising both shapes.
-    streamAlphaFullHarnessPanel(s, Quotes.panel(s, dir), root, afterHistorical,
-      historicalFrom = Some(alphaFull(s, dir)))
-
-  /** Panel-injectable q171 harness (spec hook). `historicalFrom`: a
-    * precomputed full-panel alpha frame whose day ≤ cut prefix seeds
-    * the historical mart partitions (None → compute the prefix
-    * through the template, the self-contained path). */
-  private[analytics] def streamAlphaFullHarnessPanel(s: SparkSession,
-      panel: DataFrame, root: String,
-      afterHistorical: () => Unit = () => (),
-      historicalFrom: Option[DataFrame] = None)
-      : Option[Long] => Unit =
-    streamScaffold(s, panel, root, afterHistorical,
-      buildHistorical = alphaFullHistorical(s, panel.schema,
-        historicalFrom)(root, _),
-      onBatch = alphaFullOnBatch(s, panel.schema)(root))
 
   private def alphaFullOutCols =
     Seq(col("stock"), col("day")) ++ Alpha101.columns.map(col)
@@ -1787,37 +1557,6 @@ object FactorQueries {
       org.apache.spark.sql.graftbridge.PlanBridge.optimized(
         Alpha101.compute(standIn).select(alphaFullOutCols: _*))
     }
-
-  private def alphaFullHistorical(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      historicalFrom: Option[DataFrame])(root: String, cut: Long): Unit = {
-    val hist = historicalFrom match {
-      case Some(full) =>
-        full.filter(col("day") <= cut).select(alphaFullOutCols: _*)
-      case None =>
-        val bars = s.read.parquet(s"$root/bars")
-          .withColumn("day", col("day").cast("long"))
-          .select(schema.fieldNames.map(col).toSeq: _*)
-        org.apache.spark.sql.graftbridge.PlanBridge.swapLeaf(s,
-          alphaFullTemplate(s, schema), bars)
-    }
-    hist
-      .repartition(col("day"))
-      .write.partitionBy("day").mode("overwrite").parquet(s"$root/mart")
-  }
-
-  private def alphaFullOnBatch(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType)(root: String)
-      : (DataFrame, Long) => Unit = (batch, d1) => {
-    val tail = adaptiveDayTail(s, root, batch, d1,
-      minRows = alphaFullLookbackRows)
-    val f = org.apache.spark.sql.graftbridge.PlanBridge.swapLeaf(s,
-        alphaFullTemplate(s, schema), tail.unionByName(batch))
-      .filter(col("day") >= d1)
-    withSideWrite(() => writeDayPartitions(batch, s"$root/bars")) {
-      writeDayPartitions(f, s"$root/mart")
-    }
-  }
 
   /** RETENTION + COMPACTION for the streamed stores (r18 verdict ask
     * #3): left alone, a streamed mart/bars store gains one small file
@@ -1957,24 +1696,9 @@ object FactorQueries {
     * BETWEEN appends on the live store (never inside the hot day
     * window), readers stay consistent (the fold stages through a
     * temp sibling; dynamic overwrite swaps whole partitions), and
-    * the next append's inputs are the folded files. Single-live-run
-    * contract as [[streamMartAppend]]: consume a returned frame
-    * before rerunning the entry. */
-  def streamMaintainedMartAppend: Q = (s, dir) => {
-    val (_, hist, onBatch) = streamFamilies.find(_._1 == "technical").get
-    val run = runFromSeed(s, dir, "technical", hist(s, dir),
-      root => maintainedOnBatch(s, root, onBatch(s, dir)(root)),
-      runKey = Some("technical_ret"),
-      afterCopy = root => fragmentOldestDay(s, s"$root/mart"))
-    s.read.parquet(s"$run/mart")
-      .select(col("stock"), col("day").cast("long").as("day"),
-        round(col("rsi_14"), 6).as("rsi_14"),
-        round(col("bias_20"), 6).as("bias_20"),
-        round(col("cci_14"), 6).as("cci_14"))
-      .orderBy("stock", "day")
-  }
-
-  /** Wrap a family's onBatch with the mid-stream maintenance pass:
+    * the next append's inputs are the folded files.
+    *
+    * The wrapper ([[streamEntry]] applies it with `maintained = true`):
     * before the LAST batch (d1 past the second replay window), fold
     * the aged day partitions and retire snapshots, assert the fold
     * provably worked, then run the batch against the folded store.
@@ -1982,9 +1706,9 @@ object FactorQueries {
     * batch idempotent: the rerun's fold is a no-op and must not trip
     * the had-work-to-do require. */
   private def maintainedOnBatch(s: SparkSession, root: String,
-      inner: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
+      inner: BatchFn): BatchFn = {
     var maintained = false
-    (batch, d1) => {
+    (batch, d1, dEnd) => {
       val cut = seedCut(root)
       if (d1 > cut + 10) {
         val before = dayPartitionFiles(s"$root/mart")
@@ -2001,7 +1725,7 @@ object FactorQueries {
         require(snaps.size <= 2, s"snapshot retirement kept $snaps")
         maintained = true
       }
-      inner(batch, d1)
+      inner(batch, d1, dEnd)
     }
   }
 
@@ -2620,8 +2344,8 @@ object FactorQueries {
       lit(c).as("alpha"), col(s"n_$c").as("n_nonnull"),
       // floor-based, not engine round(): integer-valued alphas make
       // averages land on exact decimal halves, where Spark and DuckDB
-      // round() disagree (same hazard as rf6's doc comment)
-      (floor(col(s"a_$c") * 1e6 + lit(0.5)) / 1e6).as("avg_v"))): _*))
+      // round() disagree (see fr6)
+      fr6(col(s"a_$c")).as("avg_v"))): _*))
     a.agg(aggs.head, aggs.tail: _*)
       .select(pairs.as("p"))
       .select(col("p.alpha").as("alpha"), col("p.n_nonnull").as("n_nonnull"),
@@ -2645,7 +2369,6 @@ object FactorQueries {
     val alphaCols = a.schema.fieldNames.filter(_.startsWith("alpha_")).sorted
     val w = Window.partitionBy("stock").orderBy("day")
     val dv = (n: Column, d: Column) => when(d =!= 0.0, n / d)
-    val fr6 = (c: Column) => floor(c * 1e6 + lit(0.5)) / 1e6
     val withFwd = a.withColumn("fwd",
       dv(lead(col("close"), 1).over(w), col("close")) - lit(1.0))
     // melt with an INTEGER alpha index (posexplode over an array of
@@ -2711,14 +2434,13 @@ object FactorQueries {
     * filter and the result one one-task sort (see [[klineReplay]]) —
     * two jobs per request. */
   def screenerMask: Q = (s, dir) => {
-    val fr6c = (c: Column) => floor(c * 1e6 + lit(0.5)) / 1e6
     val W = Window.partitionBy("stock").orderBy("day")
     val prevC = lag(col("close"), 1).over(W)
     val base = Quotes.panel(s, dir)
       .select(col("stock"), col("day"), col("pe"),
-        fr6c(col("total_mv") / 1e8).as("mv_yi"),
+        fr6(col("total_mv") / 1e8).as("mv_yi"),
         col("turnover").as("turnover_rate"),
-        fr6c((when(prevC =!= 0.0, col("close") / prevC) - lit(1.0)) * 100.0)
+        fr6((when(prevC =!= 0.0, col("close") / prevC) - lit(1.0)) * 100.0)
           .as("pct_chg"))
       .filter(col("day") === 60)
     val f = factorFrame(s, dir).filter(col("day") === 60)
@@ -2751,7 +2473,6 @@ object FactorQueries {
     * groupBy exchange on (industry, day) would not satisfy the
     * window); the result is a one-task sort (see [[klineReplay]]). */
   def sectorEquityCurve: Q = (s, dir) => {
-    val fr6c = (c: Column) => floor(c * 1e6 + lit(0.5)) / 1e6
     val W = Window.partitionBy("stock").orderBy("day")
     val prevC = lag(col("close"), 1).over(W)
     val wI = Window.partitionBy("industry").orderBy("day")
@@ -2765,9 +2486,9 @@ object FactorQueries {
         avg(col("ret")).as("chg"),
         avg(col("pe")).as("pe_raw"))
       .select(col("industry"), col("day"), col("n_constituents"),
-        fr6c(col("chg") * 100.0).as("sector_chg"),
-        fr6c(col("pe_raw")).as("sector_pe"),
-        fr6c(graft.ops.TsOps.cumProdPositive(lit(1.0) + col("chg"), wI))
+        fr6(col("chg") * 100.0).as("sector_chg"),
+        fr6(col("pe_raw")).as("sector_pe"),
+        fr6(graft.ops.TsOps.cumProdPositive(lit(1.0) + col("chg"), wI))
           .as("equity"))
       .coalesce(1).sortWithinPartitions("industry", "day")
   }
@@ -2783,7 +2504,6 @@ object FactorQueries {
     * shuffle keyed (status, day) — the same plan over two real tables
     * at 100 TB. */
   def survivorshipUnion: Q = (s, dir) => {
-    val fr6c = (c: Column) => floor(c * 1e6 + lit(0.5)) / 1e6
     val p = Quotes.panel(s, dir)
     val active = p.filter(col("stock") % 7 =!= 0)
       .withColumn("status", lit("active"))
@@ -2793,7 +2513,7 @@ object FactorQueries {
     active.unionByName(delisted, allowMissingColumns = true)
       .groupBy("status", "day")
       .agg(count(lit(1)).as("n"),
-        fr6c(avg(col("close"))).as("avg_close"),
+        fr6(avg(col("close"))).as("avg_close"),
         count(col("delist_day")).as("n_delist"))
       .orderBy("status", "day")
   }
@@ -2810,19 +2530,18 @@ object FactorQueries {
     * multiple of 1/256) so accumulation order can't move the rank
     * ordering; `chg` is fr6-quantized before the ≥5 surge compare. */
   def sectorLeaderboard: Q = (s, dir) => {
-    val fr6c = (c: Column) => floor(c * 1e6 + lit(0.5)) / 1e6
     val W = Window.partitionBy("stock").orderBy("day")
     val prevC = lag(col("close"), 1).over(W)
     Quotes.panel(s, dir)
       .select(col("day"), col("industry"), col("amount"),
-        fr6c((when(prevC =!= 0.0, col("close") / prevC) - lit(1.0)) * 100.0)
+        fr6((when(prevC =!= 0.0, col("close") / prevC) - lit(1.0)) * 100.0)
           .as("chg"))
       .repartition(col("day"))
       .groupBy("day", "industry").agg(
         count(lit(1)).as("n_stocks"),
         sum(when(col("chg") >= 5.0, 1L).otherwise(0L)).as("n_surge"),
         max(col("chg")).as("max_chg"),
-        fr6c(sum(col("amount")) / 1e8).as("heat"))
+        fr6(sum(col("amount")) / 1e8).as("heat"))
       .withColumn("rnk", rank().over(
         Window.partitionBy("day").orderBy(col("heat").desc, col("industry"))))
       .coalesce(1).sortWithinPartitions("day", "industry")
@@ -2846,14 +2565,14 @@ object FactorQueries {
     "q136_similarity_ivf_part" -> similaritySearchIvfPartitioned,
     "q151_ivf_append" -> ivfAppend,
     "q129_incremental_factors" -> incrementalFactors,
-    "q167_stream_mart_append" -> streamMartAppend,
-    "q168_stream_ema_append" -> streamEmaMartAppend,
-    "q169_stream_alpha_append" -> streamAlphaMartAppend,
-    "q170_stream_sentiment_append" -> streamSentimentMartAppend,
-    "q171_stream_alpha_full_append" -> streamAlphaFullAppend,
-    "q172_stream_momentum_append" -> streamMomentumMartAppend,
-    "q173_stream_value_append" -> streamValueMartAppend,
-    "q174_stream_maintained_append" -> streamMaintainedMartAppend,
+    "q167_stream_mart_append" -> streamEntry("technical"),
+    "q168_stream_ema_append" -> streamEntry("ema"),
+    "q169_stream_alpha_append" -> streamEntry("alpha_slice"),
+    "q170_stream_sentiment_append" -> streamEntry("sentiment"),
+    "q171_stream_alpha_full_append" -> streamEntry("alpha_full"),
+    "q172_stream_momentum_append" -> streamEntry("momentum"),
+    "q173_stream_value_append" -> streamEntry("value"),
+    "q174_stream_maintained_append" -> streamEntry("technical", maintained = true),
     "q49_kline_replay" -> klineReplay,
     "q55_peers_snapshot" -> peersSnapshot,
     "q56_factor_snapshot" -> factorSnapshot,
@@ -4394,7 +4113,7 @@ object FactorQueries {
     // streamed columns hash-matched against the full-history derive
     ("q171_stream_alpha_full_append" -> alphaBatchOracle(Alpha101.columns)) +
     // q172/q173 close the family matrix: the momentum and value marts
-    // streamed through the generic bounded-family harness, each gated
+    // streamed as kernel rows of the one family table, each gated
     // by its family's full-history oracle
     ("q172_stream_momentum_append" -> oraclesBase("q44_factor_momentum")) +
     ("q173_stream_value_append" -> oraclesBase("q45_factor_value")) +

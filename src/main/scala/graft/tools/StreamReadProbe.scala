@@ -8,7 +8,7 @@ package graft.tools
   * in its OWN JVM that polls the mart the whole time.
   *
   * The claim under test is the marts' production read contract,
-  * which StreamMartSpec:596 pins only in-process: appends CREATE day
+  * which StreamMartSpec pins only in-process (the readable-mid-maintenance case): appends CREATE day
   * partitions and never rewrite history, each batch's partitions
   * land whole (staged files move into place on commit), so a
   * concurrent reader — whatever instant its listing lands — sees

@@ -14,11 +14,78 @@ class StreamMartSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  private def fam(name: String) = FactorQueries.streamFamily(name)
+  private def panel = graft.sources.Quotes.panel(spark, dir)
+
+  /** Collect ordered rows with every double as its raw IEEE-754
+    * bits — the one comparison convention for all the bit-identity
+    * pins below (one copy: a change here changes every pin alike). */
+  private def bits(df: org.apache.spark.sql.DataFrame): Vector[Vector[Any]] =
+    df.orderBy("stock", "day")
+      .collect().map((r: org.apache.spark.sql.Row) => r.toSeq.map {
+        case d: Double => java.lang.Double.doubleToLongBits(d)
+        case v => v
+      }.toVector).toVector
+
+  /** Each family's SCRATCH reference: the full-history derive, kept
+    * independent of the streamed kernel (the alpha slice is checked
+    * against the FULL Alpha101 DAG, not its slice kernel). */
+  private val scratchDerive: Map[String,
+      org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] = Map(
+    "technical" -> graft.factors.Technical.compute,
+    "ema" -> graft.factors.EmaFamily.compute,
+    "alpha_slice" -> graft.factors.Alpha101.compute,
+    "sentiment" -> FactorQueries.sentimentCompute,
+    "alpha_full" -> graft.factors.Alpha101.compute,
+    "momentum" -> graft.factors.Momentum.compute,
+    "value" -> graft.factors.Value.compute)
+
+  /** The family's mart columns of its scratch derive over `p`, as bits. */
+  private def scratchOf(name: String, p: org.apache.spark.sql.DataFrame) =
+    bits(scratchDerive(name)(p).select((Seq(col("stock"), col("day")) ++
+      fam(name).cols.map(col)): _*))
+
+  // the full-DAG scratch derives over the dir panel are consumed by
+  // several tests — pay each once per suite
+  private val scratchMemo =
+    scala.collection.mutable.Map.empty[String, Vector[Vector[Any]]]
+  private def scratch(name: String) =
+    scratchMemo.getOrElseUpdate(name, scratchOf(name, panel))
+
+  /** The streamed mart under `root`, raw, through the entries' one
+    * mart read. */
+  private def martBits(name: String, root: String) =
+    bits(FactorQueries.streamMart(spark, root, fam(name).cols, col))
+
+  /** Run `name`'s harness over `p` to completion; returns its root. */
+  private def runHarness(name: String, p: org.apache.spark.sql.DataFrame,
+      tag: String): String = {
+    val root = graft.TempDirs.scratch(s"graft_${name}_$tag")
+    FactorQueries.streamHarness(spark, fam(name), p, root)(None)
+    root
+  }
+
+  /** The dir panel's stream cut and the lowest-id stock that trades
+    * through the whole streamed window. */
+  private def cutAndStock: (Long, Long) = {
+    val maxDay = panel.agg(max("day")).head().getLong(0)
+    val stock = panel.groupBy("stock").agg(max("day").as("md"))
+      .filter(col("md") === maxDay).agg(min("stock")).head().getLong(0)
+    (maxDay - 15, stock)
+  }
+
+  /** The dir panel with [[cutAndStock]]'s stock suspended over
+    * (cut + from, cut + to]. Returns (gapped panel, cut, that stock). */
+  private def gappedPanel(from: Int, to: Int) = {
+    val (cut, gapStock) = cutAndStock
+    (panel.filter(!(col("stock") === gapStock &&
+      col("day") > cut + from && col("day") <= cut + to)), cut, gapStock)
+  }
+
   test("streamed mart equals the scratch full-panel derive, row for row") {
-    val streamed = FactorQueries.streamMartAppend(spark, dir)
+    val streamed = FactorQueries.entries("q167_stream_mart_append")(spark, dir)
       .collect().map(_.toSeq.toVector).toVector
-    val expected = graft.factors.Technical.compute(
-        graft.sources.Quotes.panel(spark, dir))
+    val expected = graft.factors.Technical.compute(panel)
       .select(col("stock"), col("day"),
         round(col("rsi_14"), 6).as("rsi_14"),
         round(col("bias_20"), 6).as("bias_20"),
@@ -32,35 +99,35 @@ class StreamMartSpec extends SparkSpec {
 
   test("crash after a batch's writes, restart: mart identical to uninterrupted") {
     // foreachBatch is at-least-once — the widest retry window is a
-    // death AFTER a batch's mart+bars writes land but BEFORE its
-    // checkpoint commit. On restart that batch re-executes: the
-    // tail read's `day < d1` upper bound keeps its own previous
-    // bars append out of the union (without it the batch rows
-    // duplicate and the row-frame windows compute corrupted factors
-    // that dynamic overwrite then serves), and dynamic partition
-    // overwrite replaces the batch's own partitions. Final mart
-    // must equal the scratch full-panel derive, value for value.
-    val root = graft.TempDirs.scratch("graft_q167_retry")
-    val start = FactorQueries.streamMartHarness(spark, dir, root)
-    start(Some(0L)) // dies after batch 0's two writes, before commit
-    start(None)     // resume on the same checkpoint: batch 0 retries
-    val streamed = spark.read.parquet(s"$root/mart")
-      .select(col("stock"), col("day").cast("long").as("day"),
-        round(col("rsi_14"), 6).as("rsi_14"),
-        round(col("bias_20"), 6).as("bias_20"),
-        round(col("cci_14"), 6).as("cci_14"))
-      .orderBy("stock", "day")
-      .collect().map(_.toSeq.toVector).toVector
-    val expected = graft.factors.Technical.compute(
-        graft.sources.Quotes.panel(spark, dir))
-      .select(col("stock"), col("day"),
-        round(col("rsi_14"), 6).as("rsi_14"),
-        round(col("bias_20"), 6).as("bias_20"),
-        round(col("cci_14"), 6).as("cci_14"))
-      .orderBy("stock", "day")
-      .collect().map(_.toSeq.toVector).toVector
-    assert(streamed.nonEmpty && streamed == expected,
-      streamed.zip(expected).find { case (a, b) => a != b }.toString)
+    // death AFTER a batch's store writes land but BEFORE its
+    // checkpoint commit. On restart that batch re-executes: the tail
+    // read's `day < d1` upper bound keeps its own previous bars append
+    // out of the union (without it the batch rows duplicate and the
+    // row-frame windows compute corrupted factors that dynamic
+    // overwrite then serves), the state read's `day < d1` bound keeps
+    // EMA/sentiment from seeding off their own end-day snapshot (every
+    // register would advance twice; a sentiment pointer could hold a
+    // flat day INSIDE the batch and give early rows a last_flat from
+    // their future), and dynamic partition overwrite replaces the
+    // batch's own partitions. Every family dies twice — after batch
+    // 0 (retried from the historical snapshot) and after mid-stream
+    // batch 1 (retried from a streamed one) — and its final mart must
+    // equal the scratch derive bit for bit, with one state snapshot
+    // per batch end (the retries rewrote theirs, never added one).
+    FactorQueries.streamFamilies.foreach { f =>
+      val root = graft.TempDirs.scratch(s"graft_${f.name}_retry")
+      val start = FactorQueries.streamHarness(spark, f, panel, root)
+      start(Some(0L)) // dies after batch 0's writes, before its commit
+      start(Some(1L)) // batch 0 retries and commits; batch 1 writes and dies
+      start(None)     // batch 1 retries, batch 2 runs
+      val got = martBits(f.name, root)
+      assert(got.nonEmpty && got == scratch(f.name),
+        s"${f.name}: " + got.zip(scratch(f.name)).find { case (a, b) => a != b })
+      if (new java.io.File(s"$root/state").isDirectory) {
+        val snaps = FactorQueries.dayPartitionFiles(s"$root/state").keys
+        assert(snaps.size == 4, s"${f.name}: expected cut + 3 batch snapshots, got $snaps")
+      }
+    }
   }
 
   test("q167 under a long suspension: the 20-row frames survive the gap") {
@@ -69,25 +136,9 @@ class StreamMartSpec extends SparkSpec {
     // a truncated frame and silently diverged from the scratch derive
     // (r19 review finding; the adaptive 20-row floor closes it, the
     // same class the r18 ADVICE closed for q168)
-    val panel = graft.sources.Quotes.panel(spark, dir)
-    val maxDay = panel.agg(max("day")).head().getLong(0)
-    val cut = maxDay - 15
-    val gapStock = panel.groupBy("stock").agg(max("day").as("md"))
-      .filter(col("md") === maxDay).agg(min("stock")).head().getLong(0)
-    val gapped = panel.filter(!(col("stock") === gapStock &&
-      col("day") > cut - 20 && col("day") <= cut + 12))
-    val root = graft.TempDirs.scratch("graft_q167_gap")
-    FactorQueries.streamMartHarnessPanel(spark, gapped, root)(None)
-    def r6of(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("stock"), col("day").cast("long").as("day"),
-        round(col("rsi_14"), 6).as("rsi_14"),
-        round(col("bias_20"), 6).as("bias_20"),
-        round(col("cci_14"), 6).as("cci_14"))
-      .orderBy("stock", "day")
-      .collect().map(_.toSeq.toVector).toVector
-    val streamed = r6of(spark.read.parquet(s"$root/mart"))
-    val expected = r6of(graft.factors.Technical.compute(gapped)
-      .withColumn("day", col("day").cast("long")))
+    val (gapped, cut, gapStock) = gappedPanel(-20, 12)
+    val streamed = martBits("technical", runHarness("technical", gapped, "gap"))
+    val expected = scratchOf("technical", gapped)
     assert(streamed.exists(r => r(0) == gapStock &&
       r(1).asInstanceOf[Long] > cut + 12))
     assert(streamed == expected,
@@ -100,56 +151,16 @@ class StreamMartSpec extends SparkSpec {
   // q168 seeds each batch from a stored per-stock register snapshot.
   // These pins are the seeding rule's proof obligations.
 
-  /** Collect ordered rows with every double as its raw IEEE-754
-    * bits — the one comparison convention for all the bit-identity
-    * pins below (one copy: a change here changes every pin alike). */
-  private def bits(df: org.apache.spark.sql.DataFrame): Vector[Vector[Any]] =
-    df.orderBy("stock", "day")
-      .collect().map((r: org.apache.spark.sql.Row) => r.toSeq.map {
-        case d: Double => java.lang.Double.doubleToLongBits(d)
-        case v => v
-      }.toVector).toVector
-
-  private def scratchEmaOf(panel: org.apache.spark.sql.DataFrame) =
-    bits(graft.factors.EmaFamily.compute(panel)
-      .select((Seq(col("stock"), col("day")) ++
-        graft.factors.EmaFamily.columns.map(col)): _*))
-
-  // lazy: the full-DAG scratch derives are dir-fixed and consumed by
-  // several tests — pay each once per suite
-  private lazy val scratchEma = scratchEmaOf(graft.sources.Quotes.panel(spark, dir))
-
-  private def martBits(root: String) =
-    bits(spark.read.parquet(s"$root/mart")
-      .select((Seq(col("stock"), col("day").cast("long").as("day")) ++
-        graft.factors.EmaFamily.columns.map(col)): _*))
-
   test("q168: state-seeded streamed EMA mart is BIT-identical to the scratch recursion") {
     // no rounding on either side: the seed stores raw IEEE-754
     // registers and both paths advance the same EmaState.step, so
     // every streamed double must match the full-history recursion to
     // the last bit — the strongest form of the seeding-rule claim
-    val root = graft.TempDirs.scratch("graft_q168_spec")
-    val out = FactorQueries.streamEmaMartAppendRun(spark, dir, root)
-    assert(out.count() > 0)
-    val streamed = martBits(root)
-    val expected = scratchEma
+    val streamed = martBits("ema", runHarness("ema", panel, "spec"))
+    val expected = scratch("ema")
     assert(streamed.nonEmpty && streamed.size == expected.size)
     assert(streamed == expected,
       streamed.zip(expected).find { case (a, b) => a != b }.toString)
-  }
-
-  test("q168 crash after a mid-stream batch's writes, restart: mart and state recover") {
-    // the widest at-least-once window, on the operator where a retry
-    // has a NEW corruption axis: batch 1's first execution already
-    // wrote its end-day state snapshot — the retry must seed from
-    // day d1-1 (the `day < d1` bound), not from its own snapshot,
-    // or every register would advance twice
-    val root = graft.TempDirs.scratch("graft_q168_retry")
-    val start = FactorQueries.streamEmaMartHarness(spark, dir, root)
-    start(Some(1L)) // dies after batch 1's three writes, before commit
-    start(None)     // resume on the same checkpoint: batch 1 retries
-    assert(martBits(root) == scratchEma)
   }
 
   test("q168 under a per-stock trading suspension: state carries across the gap") {
@@ -162,18 +173,9 @@ class StreamMartSpec extends SparkSpec {
     // snapshot would drop it and reset its chains on resume), and
     // (2) the window-input tail supplies its last 8 ROWS, which
     // under the gap span more than 8 calendar days.
-    val panel = graft.sources.Quotes.panel(spark, dir)
-    val maxDay = panel.agg(max("day")).head().getLong(0)
-    val cut = maxDay - 15
-    // gap the lowest-id stock that trades through the whole window
-    val gapStock = panel.groupBy("stock").agg(max("day").as("md"))
-      .filter(col("md") === maxDay).agg(min("stock")).head().getLong(0)
-    val gapped = panel.filter(!(col("stock") === gapStock &&
-      col("day") > cut + 2 && col("day") <= cut + 12))
-    val root = graft.TempDirs.scratch("graft_q168_gap")
-    FactorQueries.streamEmaMartHarnessPanel(spark, gapped, root)(None)
-    val streamed = martBits(root)
-    val expected = scratchEmaOf(gapped)
+    val (gapped, cut, gapStock) = gappedPanel(2, 12)
+    val streamed = martBits("ema", runHarness("ema", gapped, "gap"))
+    val expected = scratchOf("ema", gapped)
     assert(streamed.nonEmpty && streamed.size == expected.size)
     // the resumed stock really has post-gap streamed rows (else the
     // case is vacuous)
@@ -195,9 +197,8 @@ class StreamMartSpec extends SparkSpec {
     }
     var hist = Map.empty[String, Long]
     var histState = Map.empty[String, Long]
-    FactorQueries.streamEmaMartAppendRun(spark, dir, root,
-      afterHistorical = () => { hist = snapshot("mart"); histState = snapshot("state") })
-      .collect()
+    FactorQueries.streamHarness(spark, fam("ema"), panel, root,
+      afterHistorical = () => { hist = snapshot("mart"); histState = snapshot("state") })(None)
     val after = snapshot("mart")
     assert(hist.nonEmpty && after.size > hist.size)
     hist.foreach { case (path, size) =>
@@ -218,40 +219,16 @@ class StreamMartSpec extends SparkSpec {
   // cross-sectional ranks — the tail must be FULL DAYS so the XS
   // ranks see complete cross-sections).
 
-  private def scratchAlphaSliceOf(panel: org.apache.spark.sql.DataFrame) =
-    bits(graft.factors.Alpha101.compute(panel)
-      .select((Seq(col("stock"), col("day")) ++
-        FactorQueries.streamAlphaSlice.map(col)): _*))
-
-  private lazy val scratchAlphaSlice =
-    scratchAlphaSliceOf(graft.sources.Quotes.panel(spark, dir))
-
-  private def alphaMartBits(root: String) =
-    bits(spark.read.parquet(s"$root/mart")
-      .select((Seq(col("stock"), col("day").cast("long").as("day")) ++
-        FactorQueries.streamAlphaSlice.map(col)): _*))
-
   test("q169: streamed alpha-slice mart is BIT-identical to the full-history DAG") {
     // frame containment (lags ≤ 9 vs a 25-day tail) + cross-section
     // completeness (day-partitioned bars hold every stock's bar for
     // a tail day) make the streamed rows equal the scratch Alpha101
     // run to the last bit — no rounding on either side here
-    val root = graft.TempDirs.scratch("graft_q169_spec")
-    val out = FactorQueries.streamAlphaMartAppendRun(spark, dir, root)
-    assert(out.count() > 0)
-    val streamed = alphaMartBits(root)
-    val expected = scratchAlphaSlice
+    val streamed = martBits("alpha_slice", runHarness("alpha_slice", panel, "spec"))
+    val expected = scratch("alpha_slice")
     assert(streamed.nonEmpty && streamed.size == expected.size)
     assert(streamed == expected,
       streamed.zip(expected).find { case (a, b) => a != b }.toString)
-  }
-
-  test("q169 crash after a batch's writes, restart: mart recovers") {
-    val root = graft.TempDirs.scratch("graft_q169_retry")
-    val start = FactorQueries.streamAlphaMartHarness(spark, dir, root)
-    start(Some(1L)) // dies after batch 1's writes, before its commit
-    start(None)     // resume: batch 1 retries, `day < d1` guards it
-    assert(alphaMartBits(root) == scratchAlphaSlice)
   }
 
   test("q169 under a long suspension: the tail horizon widens instead of truncating") {
@@ -263,17 +240,9 @@ class StreamMartSpec extends SparkSpec {
     // days, full-day reads keep every tail cross-section complete,
     // and the streamed mart still matches the FULL Alpha101 DAG over
     // the gapped panel bit for bit.
-    val panel = graft.sources.Quotes.panel(spark, dir)
-    val maxDay = panel.agg(max("day")).head().getLong(0)
-    val cut = maxDay - 15
-    val gapStock = panel.groupBy("stock").agg(max("day").as("md"))
-      .filter(col("md") === maxDay).agg(min("stock")).head().getLong(0)
-    val gapped = panel.filter(!(col("stock") === gapStock &&
-      col("day") > cut - 20 && col("day") <= cut + 12))
-    val root = graft.TempDirs.scratch("graft_q169_gap")
-    FactorQueries.streamAlphaMartHarnessPanel(spark, gapped, root)(None)
-    val streamed = alphaMartBits(root)
-    val expected = scratchAlphaSliceOf(gapped)
+    val (gapped, cut, gapStock) = gappedPanel(-20, 12)
+    val streamed = martBits("alpha_slice", runHarness("alpha_slice", gapped, "gap"))
+    val expected = scratchOf("alpha_slice", gapped)
     assert(streamed.nonEmpty && streamed.size == expected.size)
     // the resumed stock really has post-gap streamed rows
     assert(streamed.exists(r => r(0) == gapStock &&
@@ -289,21 +258,16 @@ class StreamMartSpec extends SparkSpec {
     // first-bar registry (absent = brand-new). The control with the
     // registry deleted shows the degradation the exemption removes
     // (whole-store read), and the partition filter pins the pruning.
-    val panel = graft.sources.Quotes.panel(spark, dir)
-    val maxDay = panel.agg(max("day")).head().getLong(0)
-    val cut = maxDay - 15
-    val donor = panel.groupBy("stock").agg(max("day").as("md"))
-      .filter(col("md") === maxDay).agg(min("stock")).head().getLong(0)
+    val (cut, donor) = cutAndStock
     val lister = panel.filter(col("stock") === donor &&
         col("day") > cut + 5 && col("day") <= cut + 10)
       .withColumn("stock", lit(9999L))
     val panel2 = panel.unionByName(lister)
-    val root = graft.TempDirs.scratch("graft_fb_listing")
-    FactorQueries.streamAlphaMartHarnessPanel(spark, panel2, root)(None)
+    val root = runHarness("alpha_slice", panel2, "listing")
     // correctness first: bit-identity holds over the listing panel
     // (the newcomer's partial-window values match the scratch DAG)
-    val streamed = alphaMartBits(root)
-    val expected = scratchAlphaSliceOf(panel2)
+    val streamed = martBits("alpha_slice", root)
+    val expected = scratchOf("alpha_slice", panel2)
     assert(streamed.exists(r => r(0) == 9999L))
     assert(streamed == expected,
       streamed.zip(expected).find { case (a, b) => a != b }.toString)
@@ -345,8 +309,8 @@ class StreamMartSpec extends SparkSpec {
       } finally st.close()
     }
     var hist = Map.empty[String, Long]
-    FactorQueries.streamAlphaMartAppendRun(spark, dir, root,
-      afterHistorical = () => hist = snapshot()).collect()
+    FactorQueries.streamHarness(spark, fam("alpha_slice"), panel, root,
+      afterHistorical = () => hist = snapshot())(None)
     val after = snapshot()
     assert(hist.nonEmpty && after.size > hist.size)
     hist.foreach { case (path, size) =>
@@ -358,41 +322,12 @@ class StreamMartSpec extends SparkSpec {
   // pointer — last_flat — as the state species, merged by greatest()
   // instead of a float recursion).
 
-  private def scratchSentimentOf(panel: org.apache.spark.sql.DataFrame) =
-    bits(FactorQueries.sentimentCompute(panel)
-      .select(col("stock"), col("day"), col("is_limit_up"),
-        col("is_limit_broken"), col("limit_up_streak"),
-        col("money_flow_main")))
-
-  private def sentimentMartBits(root: String) =
-    bits(spark.read.parquet(s"$root/mart")
-      .select(col("stock"), col("day").cast("long").as("day"),
-        col("is_limit_up"), col("is_limit_broken"),
-        col("limit_up_streak"), col("money_flow_main")))
-
   test("q170: pointer-seeded streamed sentiment mart equals the scratch derive") {
-    val root = graft.TempDirs.scratch("graft_q170_spec")
-    val out = FactorQueries.streamSentimentMartAppendRun(spark, dir, root)
-    assert(out.count() > 0)
-    val streamed = sentimentMartBits(root)
-    val expected = scratchSentimentOf(graft.sources.Quotes.panel(spark, dir))
+    val streamed = martBits("sentiment", runHarness("sentiment", panel, "spec"))
+    val expected = scratch("sentiment")
     assert(streamed.nonEmpty && streamed.size == expected.size)
     assert(streamed == expected,
       streamed.zip(expected).find { case (a, b) => a != b }.toString)
-  }
-
-  test("q170 crash after a mid-stream batch's writes, restart: pointer state recovers") {
-    // the retry must merge from the snapshot it consumed first: its
-    // own end-day pointer can hold a flat day INSIDE the batch, and
-    // re-merging it would assign early batch rows a last_flat from
-    // their future (negative streaks) — the `day < d1` guard on the
-    // state read is load-bearing here exactly as it is for q168
-    val root = graft.TempDirs.scratch("graft_q170_retry")
-    val start = FactorQueries.streamSentimentMartHarness(spark, dir, root)
-    start(Some(1L))
-    start(None)
-    assert(sentimentMartBits(root) ==
-      scratchSentimentOf(graft.sources.Quotes.panel(spark, dir)))
   }
 
   test("q170 under a suspension: the streak pointer carries across the gap") {
@@ -402,17 +337,9 @@ class StreamMartSpec extends SparkSpec {
     // adaptive 1-row tail (its true previous bar, however old) —
     // a dropped pointer would restart the streak at zero and a
     // day-bounded tail would null the resume-day return
-    val panel = graft.sources.Quotes.panel(spark, dir)
-    val maxDay = panel.agg(max("day")).head().getLong(0)
-    val cut = maxDay - 15
-    val gapStock = panel.groupBy("stock").agg(max("day").as("md"))
-      .filter(col("md") === maxDay).agg(min("stock")).head().getLong(0)
-    val gapped = panel.filter(!(col("stock") === gapStock &&
-      col("day") > cut - 20 && col("day") <= cut + 12))
-    val root = graft.TempDirs.scratch("graft_q170_gap")
-    FactorQueries.streamSentimentMartHarnessPanel(spark, gapped, root)(None)
-    val streamed = sentimentMartBits(root)
-    val expected = scratchSentimentOf(gapped)
+    val (gapped, cut, gapStock) = gappedPanel(-20, 12)
+    val streamed = martBits("sentiment", runHarness("sentiment", gapped, "gap"))
+    val expected = scratchOf("sentiment", gapped)
     assert(streamed.nonEmpty && streamed.size == expected.size)
     assert(streamed.exists(r => r(0) == gapStock &&
       r(1).asInstanceOf[Long] > cut + 12))
@@ -423,82 +350,41 @@ class StreamMartSpec extends SparkSpec {
   // ---- q171: the FULL 101-column alpha mart through the plan-once
   // template (swapLeaf) — the r18 verdict's #1 ask. The pins: the
   // streamed mart equals the scratch full-history DAG bit for bit
-  // (template-built historical), the mart-prefix historical shortcut
-  // produces the same bytes (the prefix-exactness claim), and a
-  // crash-retry recovers.
-
-  private def scratchAlphaFullOf(panel: org.apache.spark.sql.DataFrame) =
-    bits(graft.factors.Alpha101.compute(panel)
-      .select((Seq(col("stock"), col("day")) ++
-        graft.factors.Alpha101.columns.map(col)): _*))
-
-  private lazy val scratchAlphaFull =
-    scratchAlphaFullOf(graft.sources.Quotes.panel(spark, dir))
-
-  private def alphaFullMartBits(root: String) =
-    bits(spark.read.parquet(s"$root/mart")
-      .select((Seq(col("stock"), col("day").cast("long").as("day")) ++
-        graft.factors.Alpha101.columns.map(col)): _*))
+  // (template-built historical on an injected panel) and the seed
+  // path's mart-prefix historical produces the same bytes (the
+  // prefix-exactness claim).
 
   test("q171: streamed FULL alpha mart is BIT-identical to the full-history DAG") {
-    // the self-contained path: historical built THROUGH the template
+    // the injected-panel path: historical built THROUGH the template
     // too, so this case also pins swapLeaf on a second input shape
     // (the bars store read) beyond the batches' union
-    val root = graft.TempDirs.scratch("graft_q171_spec")
-    FactorQueries.streamAlphaFullHarnessPanel(spark,
-      graft.sources.Quotes.panel(spark, dir), root)(None)
-    val streamed = alphaFullMartBits(root)
-    assert(streamed.nonEmpty && streamed.size == scratchAlphaFull.size)
-    assert(streamed == scratchAlphaFull,
-      streamed.zip(scratchAlphaFull).find { case (a, b) => a != b }.toString)
+    val streamed = martBits("alpha_full", runHarness("alpha_full", panel, "spec"))
+    assert(streamed.nonEmpty && streamed.size == scratch("alpha_full").size)
+    assert(streamed == scratch("alpha_full"),
+      streamed.zip(scratch("alpha_full")).find { case (a, b) => a != b }.toString)
   }
 
   test("q171: the mart-prefix historical equals the template-built historical") {
-    // the entry path seeds historical partitions from the session
-    // alpha mart's day ≤ cut prefix instead of recomputing them —
-    // exact because every Alpha101 operator is backward-looking or
-    // same-day, so the full-panel derive restricted to the prefix IS
+    // the seed path (the entry's) builds historical partitions from
+    // the session alpha mart's day ≤ cut prefix instead of recomputing
+    // them — exact because every Alpha101 operator is backward-looking
+    // or same-day, so the full-panel derive restricted to the prefix IS
     // the prefix-only compute, byte for byte (same partition rows in
     // the same order through the same window accumulation sequence)
-    val panel = graft.sources.Quotes.panel(spark, dir)
-    val root = graft.TempDirs.scratch("graft_q171_prefix")
-    FactorQueries.streamAlphaFullHarnessPanel(spark, panel, root,
-      historicalFrom = Some(graft.factors.Alpha101.compute(panel)))(None)
-    val streamed = alphaFullMartBits(root)
-    assert(streamed.nonEmpty && streamed == scratchAlphaFull,
-      streamed.zip(scratchAlphaFull).find { case (a, b) => a != b }.toString)
+    val run = FactorQueries.runFromSeed(spark, dir, fam("alpha_full"))
+    val streamed = martBits("alpha_full", run)
+    assert(streamed.nonEmpty && streamed == scratch("alpha_full"),
+      streamed.zip(scratch("alpha_full")).find { case (a, b) => a != b }.toString)
   }
 
-  test("q171 crash after a batch's writes, restart: mart recovers") {
-    val root = graft.TempDirs.scratch("graft_q171_retry")
-    val start = FactorQueries.streamAlphaFullHarness(spark, dir, root)
-    start(Some(1L)) // dies after batch 1's writes, before its commit
-    start(None)     // resume: batch 1 retries, `day < d1` guards it
-    assert(alphaFullMartBits(root) == scratchAlphaFull)
-  }
-
-  // ---- q172/q173: momentum + value — the last two family rows,
-  // through the ONE generic bounded-family harness (q167's shape;
-  // the pins here are the bit-identity gates that would expose any
-  // hidden mechanism the "no new mechanism" claim missed).
-
-  private def scratchFamilyOf(panel: org.apache.spark.sql.DataFrame,
-      kernel: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      cols: Seq[String]) =
-    bits(kernel(panel).select((Seq(col("stock"), col("day")) ++ cols.map(col)): _*))
-
-  private def familyMartBits(root: String, cols: Seq[String]) =
-    bits(spark.read.parquet(s"$root/mart")
-      .select((Seq(col("stock"), col("day").cast("long").as("day")) ++
-        cols.map(col)): _*))
+  // ---- q172/q173: momentum + value — the last two family rows, both
+  // kernel rows of the table (q167's shape; the pins here are the
+  // bit-identity gates that would expose any hidden mechanism the
+  // "no new mechanism" claim missed).
 
   test("q172: streamed momentum mart is BIT-identical to the scratch derive") {
-    val panel = graft.sources.Quotes.panel(spark, dir)
-    val root = graft.TempDirs.scratch("graft_q172_spec")
-    FactorQueries.streamMomentumHarnessPanel(spark, panel, root)(None)
-    val streamed = familyMartBits(root, graft.factors.Momentum.columns)
-    val expected = scratchFamilyOf(panel, graft.factors.Momentum.compute,
-      graft.factors.Momentum.columns)
+    val streamed = martBits("momentum", runHarness("momentum", panel, "spec"))
+    val expected = scratch("momentum")
     assert(streamed.nonEmpty && streamed == expected,
       streamed.zip(expected).find { case (a, b) => a != b }.toString)
   }
@@ -507,18 +393,9 @@ class StreamMartSpec extends SparkSpec {
     // roc_60 / pos_60 reach 60 prior ROWS — a resumed stock's rows
     // sit far outside any fixed day horizon, the exact divergence
     // class the adaptive tail exists for
-    val panel = graft.sources.Quotes.panel(spark, dir)
-    val maxDay = panel.agg(max("day")).head().getLong(0)
-    val cut = maxDay - 15
-    val gapStock = panel.groupBy("stock").agg(max("day").as("md"))
-      .filter(col("md") === maxDay).agg(min("stock")).head().getLong(0)
-    val gapped = panel.filter(!(col("stock") === gapStock &&
-      col("day") > cut - 20 && col("day") <= cut + 12))
-    val root = graft.TempDirs.scratch("graft_q172_gap")
-    FactorQueries.streamMomentumHarnessPanel(spark, gapped, root)(None)
-    val streamed = familyMartBits(root, graft.factors.Momentum.columns)
-    val expected = scratchFamilyOf(gapped, graft.factors.Momentum.compute,
-      graft.factors.Momentum.columns)
+    val (gapped, cut, gapStock) = gappedPanel(-20, 12)
+    val streamed = martBits("momentum", runHarness("momentum", gapped, "gap"))
+    val expected = scratchOf("momentum", gapped)
     assert(streamed.exists(r => r(0) == gapStock &&
       r(1).asInstanceOf[Long] > cut + 12))
     assert(streamed == expected,
@@ -526,12 +403,8 @@ class StreamMartSpec extends SparkSpec {
   }
 
   test("q173: streamed value mart is BIT-identical to the scratch derive") {
-    val panel = graft.sources.Quotes.panel(spark, dir)
-    val root = graft.TempDirs.scratch("graft_q173_spec")
-    FactorQueries.streamValueHarnessPanel(spark, panel, root)(None)
-    val streamed = familyMartBits(root, graft.factors.Value.columns)
-    val expected = scratchFamilyOf(panel, graft.factors.Value.compute,
-      graft.factors.Value.columns)
+    val streamed = martBits("value", runHarness("value", panel, "spec"))
+    val expected = scratch("value")
     assert(streamed.nonEmpty && streamed == expected,
       streamed.zip(expected).find { case (a, b) => a != b }.toString)
   }
@@ -542,10 +415,9 @@ class StreamMartSpec extends SparkSpec {
     // requires prove the fold worked), and the final mart still
     // equals the scratch full-panel derive value for value — layout
     // maintenance is invisible to readers
-    val streamed = FactorQueries.streamMaintainedMartAppend(spark, dir)
+    val streamed = FactorQueries.entries("q174_stream_maintained_append")(spark, dir)
       .collect().map(_.toSeq.toVector).toVector
-    val expected = graft.factors.Technical.compute(
-        graft.sources.Quotes.panel(spark, dir))
+    val expected = graft.factors.Technical.compute(panel)
       .select(col("stock"), col("day"),
         round(col("rsi_14"), 6).as("rsi_14"),
         round(col("bias_20"), 6).as("bias_20"),
@@ -579,10 +451,9 @@ class StreamMartSpec extends SparkSpec {
     // correlation chain (reference alpha101_function.md:52) is why
     // the floor is 300; an undersized floor diverges exactly here.
     val panel = deepPanel(stocks = 8, days = 520)
-    val root = graft.TempDirs.scratch("graft_q171_deep")
-    FactorQueries.streamAlphaFullHarnessPanel(spark, panel, root)(None)
-    val streamed = alphaFullMartBits(root)
-    val expected = scratchAlphaFullOf(panel)
+    val root = runHarness("alpha_full", panel, "deep")
+    val streamed = martBits("alpha_full", root)
+    val expected = scratchOf("alpha_full", panel)
     assert(streamed.nonEmpty && streamed.size == expected.size)
     assert(streamed == expected,
       streamed.zip(expected).find { case (a, b) => a != b }.toString)
@@ -610,11 +481,9 @@ class StreamMartSpec extends SparkSpec {
     // prior rows + slack = 64): the 25 rung cannot hold 64 rows, the
     // 100 rung can — and must be chosen over widening further
     val panel = deepPanel(stocks = 8, days = 220)
-    val root = graft.TempDirs.scratch("graft_q172_deep")
-    FactorQueries.streamMomentumHarnessPanel(spark, panel, root)(None)
-    val streamed = familyMartBits(root, graft.factors.Momentum.columns)
-    val expected = scratchFamilyOf(panel, graft.factors.Momentum.compute,
-      graft.factors.Momentum.columns)
+    val root = runHarness("momentum", panel, "deep")
+    val streamed = martBits("momentum", root)
+    val expected = scratchOf("momentum", panel)
     assert(streamed.nonEmpty && streamed == expected,
       streamed.zip(expected).find { case (a, b) => a != b }.toString)
     val cut = 220 - 15
@@ -636,8 +505,7 @@ class StreamMartSpec extends SparkSpec {
   // newest k, and prove a mid-stream retirement never breaks seeding.
 
   test("retention: fold merges a fragmented aged day partition; reads byte-identical") {
-    val root = graft.TempDirs.scratch("graft_ret_fold")
-    FactorQueries.streamMartHarness(spark, dir, root)(None)
+    val root = runHarness("technical", panel, "ret_fold")
     def martRows() = bits(spark.read.parquet(s"$root/mart")
       .select(col("stock"), col("day").cast("long").as("day"),
         col("rsi_14"), col("bias_20"), col("cci_14")))
@@ -677,7 +545,7 @@ class StreamMartSpec extends SparkSpec {
     // write), so retiring to the newest 2 is safe and the final mart
     // still matches the scratch recursion bit for bit
     val root = graft.TempDirs.scratch("graft_ret_snap")
-    val start = FactorQueries.streamEmaMartHarness(spark, dir, root)
+    val start = FactorQueries.streamHarness(spark, fam("ema"), panel, root)
     start(Some(1L)) // batches 0,1 executed; batch 1 not committed
     val snaps = FactorQueries.dayPartitionFiles(s"$root/state").keys
     assert(snaps.size == 3, s"expected cut + 2 batch snapshots, got $snaps")
@@ -685,7 +553,7 @@ class StreamMartSpec extends SparkSpec {
     val kept = FactorQueries.dayPartitionFiles(s"$root/state").keys
     assert(kept == snaps.toSeq.sorted.takeRight(2).toSet, s"kept $kept")
     start(None) // batch 1 retries (seeds from the second-newest), batch 2 runs
-    assert(martBits(root) == scratchEma)
+    assert(martBits("ema", root) == scratch("ema"))
   }
 
   test("readable mid-maintenance: a pre-append reader sees the OLD complete set, a mid-append reader complete partitions") {
@@ -699,11 +567,10 @@ class StreamMartSpec extends SparkSpec {
     // stops the stream at exactly that boundary). Old set or new
     // set, never a torn partition.
     val root = graft.TempDirs.scratch("graft_reader")
-    val start = FactorQueries.streamMartHarness(spark, dir, root)
+    val start = FactorQueries.streamHarness(spark, fam("technical"), panel, root)
     // snapshot reader: listing fixed NOW (historical partitions only)
     val preReader = spark.read.parquet(s"$root/mart")
     val histDays = FactorQueries.dayPartitionFiles(s"$root/mart").keySet
-    val panel = graft.sources.Quotes.panel(spark, dir)
     val rowsPerDay = panel.groupBy("day").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     start(Some(1L)) // batches 0,1 fully written; stream stopped mid-run
@@ -733,9 +600,8 @@ class StreamMartSpec extends SparkSpec {
       } finally st.close()
     }
     var hist = Map.empty[String, Long]
-    val out = FactorQueries.streamMartAppendRun(spark, dir, root,
-      afterHistorical = () => hist = snapshot())
-    out.collect()
+    FactorQueries.streamHarness(spark, fam("technical"), panel, root,
+      afterHistorical = () => hist = snapshot())(None)
     val after = snapshot()
     assert(hist.nonEmpty && after.size > hist.size)
     // every historical file survives at its original size — dynamic
@@ -744,8 +610,7 @@ class StreamMartSpec extends SparkSpec {
       assert(after.get(path).contains(size), s"historical file rewritten: $path")
     }
     // and the new files live in day partitions ABOVE the cut only
-    val maxDay = graft.sources.Quotes.panel(spark, dir)
-      .agg(max("day")).head().getLong(0)
+    val maxDay = panel.agg(max("day")).head().getLong(0)
     val newFiles = after.keySet.diff(hist.keySet)
     assert(newFiles.nonEmpty)
     newFiles.foreach { p =>
