@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE local-mode session builder behind every runnable main
-  * (Verify and the race probes) and the perfbench harness. A conf
+  * (Verify, CrossProcessSpec's child JVMs) and the perfbench harness. A conf
   * block copied per main drifts: a measured tuning applied to some
   * copies silently unbalances the comparison between them.
   *

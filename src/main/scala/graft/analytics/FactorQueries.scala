@@ -421,8 +421,7 @@ object FactorQueries {
       historical: StreamEnv => (String, Long) => Unit,
       onBatch: StreamEnv => String => BatchFn) {
     /** The same family with every batch body wrapped by `w` (given the
-      * store root): q174's in-stream maintenance, the read-race probe's
-      * pause. */
+      * store root): q174's in-stream maintenance. */
     def wrapBatch(w: (String, BatchFn) => BatchFn): StreamFamily =
       copy(onBatch = e => root => w(root, onBatch(e)(root)))
   }
@@ -430,11 +429,11 @@ object FactorQueries {
   /** The one streamed-family harness over an explicit panel and root:
     * the scaffold stores over `day <= cut` ([[seedStores]]), the
     * family's historical build, the `afterHistorical` hook (specs
-    * snapshot the historical files there; the read-race probe drops
-    * its ready marker), and the start function. Each invocation of the
-    * returned function runs one `Trigger.AvailableNow` pass against
-    * the SAME checkpoint, so the restart-recovery pins can kill a run
-    * mid-stream and resume it (q156's harness shape);
+    * snapshot the historical files there), and the start function.
+    * Each invocation of the returned function runs one
+    * `Trigger.AvailableNow` pass against the SAME checkpoint, so the
+    * restart-recovery pins can kill a run mid-stream and resume it
+    * (q156's harness shape);
     * `failAfterWritesOf` injects a crash AFTER that batch's store
     * writes land but BEFORE its checkpoint commit — the widest
     * at-least-once retry window. Retry/idempotence mechanics (the
@@ -491,7 +490,7 @@ object FactorQueries {
     cut
   }
 
-  private def seedCut(root: String): Long = {
+  private[analytics] def seedCut(root: String): Long = {
     val props = new java.util.Properties()
     val (fs, rootP) = fsPath(root)
     val in = fs.open(
@@ -803,11 +802,11 @@ object FactorQueries {
     s.read.parquet(s"${baseStreamSeed(s, dir)}/in/b0").schema
 
   /** The streamed families, one row each; the registry's q167–q174
-    * entries, the seeds, the harness, both cross-process probes and
-    * StreamMartSpec all read them from here. Bounded-lookback families
-    * are kernel rows ([[kernelFamily]]); EMA, sentiment and the full
-    * alpha mart keep their own bodies. Lazy: object init must not
-    * capture a val declared below it. */
+    * entries, the seeds, the harness, the persistent store,
+    * StreamMartSpec and CrossProcessSpec all read them from here.
+    * Bounded-lookback families are kernel rows ([[kernelFamily]]);
+    * EMA, sentiment and the full alpha mart keep their own bodies.
+    * Lazy: object init must not capture a val declared below it. */
   private[analytics] lazy val streamFamilies: Seq[StreamFamily] = Seq(
     // q167: rsi/bias/cci through the tail-restricted Technical DAG
     // (q129's); 20-row floor = bias_20's MA, the deepest of the three.
@@ -833,28 +832,6 @@ object FactorQueries {
     streamFamilies.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"unknown streamed family $name"))
 
-  /** Cross-process reader-probe hook (r19 verdict ask #6,
-    * `tools/stream_read_race.sh`): the q167 harness against an
-    * explicit SHARED root, with a ready-marker file once the
-    * historical mart lands and an optional pause after each batch so
-    * a second PROCESS gets real mid-maintenance windows to read
-    * through. StreamMartSpec pins the listing-snapshot semantics
-    * in-JVM; the production claim is a separate reader process, and
-    * that is what [[graft.tools.StreamReadProbe]] exercises. */
-  private[graft] def streamMartProbeRun(s: SparkSession, dir: String,
-      root: String, batchPauseMs: Long): Unit = {
-    val paused = streamFamily("technical").wrapBatch((_, inner) =>
-      (b, d1, dEnd) => {
-        inner(b, d1, dEnd)
-        if (batchPauseMs > 0) Thread.sleep(batchPauseMs)
-      })
-    streamHarness(s, paused, Quotes.panel(s, dir), root,
-      afterHistorical = () => {
-        val (fs, p) = fsPath(s"$root/_PROBE_READY")
-        fs.create(p, true).close()
-      })(None)
-  }
-
   // ---- PERSISTENT streamed store (r19 verdict ask #8, stretch):
   // the entries run from session-scratch seeds, but the nightly
   // production story is ONE store — bars + mart + first-bar registry
@@ -862,18 +839,15 @@ object FactorQueries {
   // manifest on reuse (the factor-mart gate, applied to the stream
   // plane), appended by each night's AvailableNow pass on the SAME
   // checkpoint, and maintained (fold + snapshot retirement) between
-  // appends. tools/stream_persist.sh drives it as two sequential
-  // JVMs and records the run in README.
+  // appends. [[streamStoreNight]] is one such night; CrossProcessSpec
+  // runs night 0 in a child JVM and night 1 in the test JVM.
 
-  private[graft] val streamManifestName = "_GRAFT_STREAM_MANIFEST.properties"
+  private val streamManifestName = "_GRAFT_STREAM_MANIFEST.properties"
 
-  private[graft] def streamStorePathFor(root: String, d: String): String = {
+  private[analytics] def streamStorePathFor(root: String, d: String): String = {
     val name = new org.apache.hadoop.fs.Path(d).getName
     s"$root/stream-technical-$name-${md5Hex(canonicalSource(d)).take(8)}"
   }
-
-  private def technicalVersion: String =
-    martDatasets.find(_.name == "technical").get.version
 
   /** The streamed technical mart's stored field list — data columns
     * then the `day` partition column, as parquet inference returns
@@ -889,7 +863,7 @@ object FactorQueries {
     * both planes when the formulas change). */
   private def streamStoreAxes(d: String): Map[String, String] = Map(
     "kind" -> "stream-technical",
-    "version" -> technicalVersion,
+    "version" -> technicalDataset.version,
     "source" -> canonicalSource(d),
     "fingerprint" -> dirFingerprint(d))
 
@@ -900,7 +874,7 @@ object FactorQueries {
     * drifted on the schema/cols axes, the silent-staleness class the
     * gate exists to prevent), with completed-write markers on both
     * mutable stores. Invalid ⇒ the caller rebuilds from scratch. */
-  private[graft] def streamStoreValid(s: SparkSession, p: String,
+  private[analytics] def streamStoreValid(s: SparkSession, p: String,
       d: String): Boolean =
     manifestGateValid(s, s"$p/$streamManifestName",
       markers = Seq(s"$p/mart/_SUCCESS", s"$p/bars/_SUCCESS"),
@@ -915,61 +889,36 @@ object FactorQueries {
         ("schema" -> schemaString(storedSchemaFields(s, s"$p/mart"))),
       "graft persistent streamed-store manifest")
 
-  /** One probe pass over the persistent streamed store (the
-    * [[graft.tools.StreamPersistProbe]] body — here because every
-    * piece it composes is package-private by design):
+  /** One night on the persistent streamed store under `root` for
+    * source `dir`:
     *
     *  - INVALID/ABSENT store → wipe and build: scaffold stores +
-    *    historical technical mart + manifest (session 1's night 0);
-    *  - VALID store → REUSE: no rebuild; run the nightly maintenance
-    *    first — plant the fragmentation shape retries accumulate,
-    *    [[compactStreamStore]] folds it and retires first-bar
-    *    snapshots to 2, in-probe requires prove the fold worked and
-    *    stayed off the hot window (session 2's night N);
+    *    historical technical mart + manifest (night 0);
+    *  - VALID store → REUSE, no rebuild: [[compactStreamStore]] folds
+    *    the aged (day ≤ cut) partitions and retires first-bar
+    *    snapshots to 2, off the hot retry/tail window;
     *  - EITHER WAY, one `Trigger.AvailableNow` pass on the store's
     *    OWN persistent checkpoint: unprocessed replay files append
     *    once; a drained checkpoint no-ops — the idempotent nightly
-    *    restart, now across sessions.
+    *    restart, across sessions.
     *
-    * Returns the probe line: reuse flag, row count, full-content
-    * checksum (sessions must agree — maintenance and reuse must not
-    * move a value), and post-run manifest validity. */
-  private[graft] def streamPersistProbeRun(s: SparkSession, root: String,
-      dir: String): String = {
+    * Returns whether the store was reused. */
+  private[analytics] def streamStoreNight(s: SparkSession, root: String,
+      dir: String): Boolean = {
     val p = streamStorePathFor(root, dir)
     val technical = streamFamily("technical")
     val env = StreamEnv(s, () => s.read.parquet(s"$p/in/b0").schema, None)
-    val pre = streamStoreValid(s, p, dir)
-    if (!pre) {
+    val reused = streamStoreValid(s, p, dir)
+    if (!reused) {
       val (fs, pp) = fsPath(p)
       if (fs.exists(pp)) fs.delete(pp, true)
       val cut = seedStores(s, Quotes.panel(s, dir), p)
       technical.historical(env)(p, cut)
       writeStreamManifest(s, p, dir)
-    } else {
-      val cut = seedCut(p)
-      fragmentOldestDay(s, s"$p/mart")
-      require(dayPartitionFiles(s"$p/mart").exists { case (d, n) =>
-        d <= cut && n > 1 }, "probe expected a fragmented aged partition")
-      compactStreamStore(s, p, keepSnapshots = 2, foldAtOrBelow = Some(cut))
-      val after = dayPartitionFiles(s"$p/mart")
-      require(after.forall { case (d, n) => d > cut || n == 1 },
-        s"fold left an aged partition fragmented: $after")
-      require(dayPartitionFiles(s"$p/firstbar").size <= 2,
-        "snapshot retirement failed")
-    }
+    } else
+      compactStreamStore(s, p, keepSnapshots = 2, foldAtOrBelow = Some(seedCut(p)))
     streamStart(s, p, s"$p/in", technical.onBatch(env)(p))(None)
-    val mart = s.read.parquet(s"$p/mart")
-    // bit_xor of a row hash, the MartRaceProbe convention: ANSI mode
-    // throws on long-sum overflow, and rows are unique by (stock,
-    // day) so xor cancellation can't mask a diff
-    val cols = mart.schema.fieldNames.map(col).toSeq
-    val agg = mart.select(count(lit(1)).as("n"),
-      bit_xor(xxhash64(cols: _*)).as("h")).head()
-    val post = streamStoreValid(s, p, dir)
-    s"SPERSIST pid=${ProcessHandle.current.pid} preValid=$pre " +
-      s"path=$p rows=${agg.getLong(0)} checksum=${agg.getLong(1)} " +
-      s"postValid=$post"
+    reused
   }
 
   /** q168: STREAMING maintenance of the RECURSIVE factor family —
@@ -1734,7 +1683,7 @@ object FactorQueries {
     * provably has work to do. Values untouched: the rows round-trip
     * through a temp sibling (parquet stores doubles as raw IEEE-754
     * bits) and dynamic overwrite replaces exactly that partition. */
-  private def fragmentOldestDay(s: SparkSession, path: String): Unit = {
+  private[analytics] def fragmentOldestDay(s: SparkSession, path: String): Unit = {
     val oldest = dayPartitionFiles(path).keys.min
     val tmp = s"$path.frag-${System.nanoTime}"
     try {
@@ -2015,7 +1964,7 @@ object FactorQueries {
   private[analytics] val momentumDataset = MartDataset("momentum", "v1",
     (ss, d) => Momentum.compute(Quotes.panel(ss, d)),
     keyedCols(Momentum.columns))
-  private[graft] val valueDataset = MartDataset("value", "v1",
+  private[analytics] val valueDataset = MartDataset("value", "v1",
     (ss, d) => Value.compute(Quotes.panel(ss, d)),
     keyedCols(Value.columns))
   private[analytics] val sentimentDataset = MartDataset("sentiment", "v1",
@@ -2023,7 +1972,7 @@ object FactorQueries {
     keyedCols(Seq("is_limit_up", "is_limit_broken", "limit_up_streak",
       "money_flow_main")))
 
-  private[graft] val martDatasets: Seq[MartDataset] = Seq(
+  private val martDatasets: Seq[MartDataset] = Seq(
     alphaDataset, technicalDataset, emaDataset, momentumDataset,
     valueDataset, sentimentDataset)
 
@@ -2096,7 +2045,7 @@ object FactorQueries {
   def ignorePersistentMartRoot(): Unit = { persistentRootIgnored = true }
   @volatile private var persistentRootIgnored = false
 
-  private[graft] val martManifestName = "_GRAFT_MANIFEST.properties"
+  private[analytics] val martManifestName = "_GRAFT_MANIFEST.properties"
 
   /** The persistent location of one dataset's mart under a root. The
     * directory name carries a digest of the CANONICAL source path:
@@ -2118,7 +2067,7 @@ object FactorQueries {
     }
   }
 
-  private[graft] def martPathFor(root: String, d: String,
+  private[analytics] def martPathFor(root: String, d: String,
       ds: MartDataset): String = {
     val name = new org.apache.hadoop.fs.Path(d).getName
     s"$root/${ds.name}-$name-${md5Hex(canonicalSource(d)).take(8)}"
@@ -2138,7 +2087,7 @@ object FactorQueries {
     * 3): a concurrent session never observes a partially written
     * mart, and two racing builders resolve to one winner whose
     * output is validated like any other reuse. */
-  private[graft] def buildMartAt(ss: SparkSession, d: String,
+  private[analytics] def buildMartAt(ss: SparkSession, d: String,
       ds: MartDataset, root: Option[String]): String = {
     val persistent = root.map(r => martPathFor(r, d, ds))
     persistent.filter(p => martValid(ss, p, ds, d)).getOrElse {
@@ -2190,8 +2139,8 @@ object FactorQueries {
                   if (attempts >= 3) {
                     // retry exhaustion must not leak the loser's full
                     // mart copy under the persistent root — the
-                    // condition tools/mart_race.sh asserts never
-                    // happens (r18 ADVICE 2); best-effort, the throw
+                    // condition CrossProcessSpec's mart race asserts
+                    // never happens (r18 ADVICE 2); best-effort, the throw
                     // wins over a cleanup failure
                     try deleteRecursively(src) catch { case _: Exception => () }
                     throw e
@@ -2224,7 +2173,7 @@ object FactorQueries {
     "source" -> canonicalSource(d),
     "fingerprint" -> dirFingerprint(d))
 
-  private[graft] def martValid(ss: SparkSession, p: String,
+  private[analytics] def martValid(ss: SparkSession, p: String,
       ds: MartDataset, d: String): Boolean =
     manifestGateValid(ss, s"$p/$martManifestName",
       markers = Seq(s"$p/_SUCCESS"), dataPath = p,
